@@ -13,7 +13,7 @@ transcripts:
                    classification / assessment stages
                    (``lib/idp_common_pkg/idp_common/ocr/service.py``,
                    ``classification/service.py``, ``assessment/service.py``).
-- ``operators``  — DataFrame operators: extraction (mapInPandas with
+- ``operators``  — DataFrame operators: extraction (mapInArrow with
                    lineage), segmentation (window gaps-and-islands),
                    evaluation comparators & metric rollups, dedup,
                    similarity search, text analysis.

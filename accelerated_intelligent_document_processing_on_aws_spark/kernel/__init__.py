@@ -1,7 +1,7 @@
 """Pure-Python extraction kernel.
 
 Deterministic, order-independent, and side-effect free so that the
-Spark job (which applies it over Arrow batches via ``mapInPandas``)
+Spark job (which applies it over Arrow batches via ``mapInArrow``)
 byte-equals the single-threaded oracle regardless of partitioning.
 
 Stage analogs in the reference repo

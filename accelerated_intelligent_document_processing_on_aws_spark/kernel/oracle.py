@@ -1,7 +1,8 @@
 """Per-turn extraction oracle: the single composition of the kernel.
 
-Both the Spark job (via Arrow-batched ``mapInPandas``) and the golden
-generator call :func:`extract_turn`, so per-turn byte-equality between
+The Spark job (via Arrow-batched ``mapInArrow``) calls
+:func:`extract_turn_raw` and the golden generator its dict-shaped
+wrapper :func:`extract_turn`, so per-turn byte-equality between
 the distributed run and the single-threaded run tests exactly what the
 north rule demands: that partitioning, shuffling, salting, and order
 restoration never perturb the output.

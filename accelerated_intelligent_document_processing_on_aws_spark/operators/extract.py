@@ -2,7 +2,7 @@
 
 Replaces the reference's OCR→classification→assessment Lambda chain
 (``patterns/pattern-2/statemachine/workflow.asl.json``) with ONE
-Arrow-batched ``mapInPandas`` pass: each executor pulls columnar
+Arrow-batched ``mapInArrow`` pass: each executor pulls columnar
 batches, runs the pure kernel per turn, and emits the extracted
 columns.  There is no per-row Python at the Spark API surface — batches
 in, batches out — matching the input-hint requirement.
@@ -12,8 +12,9 @@ Scale design (100 TB / 10^12 turns):
 - **Salted repartition.**  Turn-level extraction is embarrassingly
   parallel, but Zipf conversation lengths make any conv_id-keyed layout
   skewed.  We repartition by ``xxhash64(conv_id)`` *plus a turn-derived
-  salt* so one 10^6-turn conversation spreads across ``salt`` tasks
-  (north rule's skew defusal).  The later window/segmentation phase
+  salt* so one 10^6-turn conversation spreads across up to ``salt``
+  kernel tasks (north rule's skew defusal); by default there is one
+  kernel task per core.  The later window/segmentation phase
   re-shuffles by conv_id alone — that phase touches only the narrow
   derived columns, never the raw text.
 - **Column pruning.**  The kernel consumes exactly
@@ -29,7 +30,6 @@ Scale design (100 TB / 10^12 turns):
 from __future__ import annotations
 
 import time
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark import TaskContext
@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..kernel.oracle import extract_turn, extract_turn_raw
+from ..kernel.oracle import extract_turn_raw
 
 SPAN_TYPE = T.ArrayType(
     T.StructType(
@@ -69,55 +69,11 @@ EXTRACTED_SCHEMA = T.StructType(
 )
 
 
-def _kernel_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    ctx = TaskContext.get()
-    pid = ctx.partitionId() if ctx is not None else -1
-    for pdf in batches:
-        t0 = time.perf_counter()
-        n = len(pdf)
-        if n == 0:
-            continue
-        texts = pdf["text"].to_numpy()
-        roles = pdf["role"].to_numpy()
-        tools = pdf["tool"].to_numpy()
-        ex_text: list[str] = []
-        ex_spans: list[list[dict]] = []
-        ex_cls: list[str] = []
-        ex_bnd: list[str] = []
-        ex_conf: list[float] = []
-        ex_kind: list[str] = []
-        for i in range(n):
-            r = extract_turn(texts[i], roles[i], tools[i])
-            ex_text.append(r["extracted_text"])
-            ex_spans.append(r["spans"])
-            ex_cls.append(r["classification"])
-            ex_bnd.append(r["boundary"])
-            ex_conf.append(r["confidence"])
-            ex_kind.append(r["payload_kind"])
-        row_ms = (time.perf_counter() - t0) * 1000.0 / n
-        yield pd.DataFrame(
-            {
-                "conv_id": pdf["conv_id"],
-                "turn_idx": pdf["turn_idx"],
-                "role": pdf["role"],
-                "tool": pdf["tool"],
-                "ts": pdf["ts"],
-                "payload_kind": ex_kind,
-                "extracted_text": ex_text,
-                "spans": ex_spans,
-                "classification": ex_cls,
-                "boundary": ex_bnd,
-                "confidence": ex_conf,
-                "_partition_id": pid,
-                "_row_ms": row_ms,
-            }
-        )
-
-
 def _kernel_batches_arrow(batches):
-    """mapInArrow twin of :func:`_kernel_batches`: builds the output
-    RecordBatch with pyarrow directly, skipping the pandas object-column
-    round-trip (list-of-dict spans are the expensive part)."""
+    """The ``mapInArrow`` kernel wrapper: runs :func:`extract_turn_raw`
+    per turn and builds the output RecordBatch with pyarrow directly,
+    spans assembled as flat struct arrays (no per-span dict, no pandas
+    object columns)."""
     import pyarrow as pa
 
     ctx = TaskContext.get()
@@ -192,16 +148,37 @@ def _kernel_batches_arrow(batches):
         )
 
 
+def _salted_repartition(
+    df: DataFrame, salt: int, num_partitions: int | None
+) -> DataFrame:
+    """Hash-repartition by ``(xxhash64(conv_id), pmod(turn_idx, salt))``
+    into ``num_partitions`` kernel tasks, by default one per core
+    (``defaultParallelism``).
+
+    The salt, not the task count, spreads a hot conversation: its
+    ``salt`` sub-keys hash across the tasks.  More tasks than cores only
+    add fixed costs: every Python-evaluated task pays the worker set-up
+    before its first row (about 0.2 s on a 4-vCPU host, see NOTES.md),
+    and every checkpoint wave writes one parquet file per task and
+    bucket."""
+    if num_partitions is None:
+        num_partitions = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(
+        num_partitions, F.xxhash64("conv_id"), F.pmod(F.col("turn_idx"), F.lit(salt))
+    )
+
+
 def extract_turns(
     transcripts: DataFrame,
     num_partitions: int | None = None,
     salt: int = 16,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Run the extraction kernel over a transcripts DataFrame.
 
     ``salt`` splits each conversation across up to ``salt`` kernel tasks
-    (pure per-turn work, order restored downstream by window sort).
+    (pure per-turn work, order restored downstream by window sort);
+    ``num_partitions`` is the number of kernel tasks, one per core by
+    default.
 
     ``salt=0`` skips the repartition entirely and runs the kernel
     straight on the SCAN partitions — zero shuffle, so the text bytes
@@ -215,16 +192,8 @@ def extract_turns(
     """
     df = transcripts.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
     if salt > 0:
-        if num_partitions is None:
-            # 3× cores measured fastest for the kernel stage in the round-2
-            # sweep (enough slots to absorb Zipf stragglers; with 5k-row Arrow
-            # batches the extra partitions don't over-fragment transfers)
-            num_partitions = 3 * transcripts.sparkSession.sparkContext.defaultParallelism
-        parts = [F.xxhash64("conv_id"), F.pmod(F.col("turn_idx"), F.lit(salt))]
-        df = df.repartition(num_partitions, *parts)
-    if use_arrow:
-        return df.mapInArrow(_kernel_batches_arrow, schema=EXTRACTED_SCHEMA)
-    return df.mapInPandas(_kernel_batches, schema=EXTRACTED_SCHEMA)
+        df = _salted_repartition(df, salt, num_partitions)
+    return df.mapInArrow(_kernel_batches_arrow, schema=EXTRACTED_SCHEMA)
 
 
 def extract_turns_skew_aware(
@@ -268,13 +237,7 @@ def extract_turns_skew_aware(
     )
     light = df.join(heavy_ids, "conv_id", "left_anti")
     heavy = df.join(heavy_ids, "conv_id", "left_semi")
-    if num_partitions is None:
-        num_partitions = transcripts.sparkSession.sparkContext.defaultParallelism
-    heavy = heavy.repartition(
-        num_partitions,
-        F.xxhash64("conv_id"),
-        F.pmod(F.col("turn_idx"), F.lit(max(salt, 1))),
-    )
+    heavy = _salted_repartition(heavy, max(salt, 1), num_partitions)
     return light.mapInArrow(_kernel_batches_arrow, schema=EXTRACTED_SCHEMA).unionAll(
         heavy.mapInArrow(_kernel_batches_arrow, schema=EXTRACTED_SCHEMA)
     )

@@ -37,8 +37,8 @@ def get_spark(
         # the kernel-on-scan-partitions paths (the 190 MB / 107-row-group
         # bench corpus scanned as 12 tasks on 32 cores — the salt=0 and
         # skew-aware extraction legs ran at 1/3 parallelism).  The floor
-        # is derived from the core count (3× — the round-2 sweep's kernel
-        # partition multiple), never a constant, so a cluster-scale scan
+        # is derived from the core count (3×, from the round-2 kernel
+        # partition sweep), never a constant, so a cluster-scale scan
         # with thousands of natural splits is untouched; single-row-group
         # files keep their openCost floor (this knob cannot over-split
         # tiny files).

@@ -5,7 +5,7 @@ The reference ingests via S3 events → SQS → Lambda
 i.e. micro-batched file arrival.  The Spark-native restatement is a
 file-source stream: new parquet shards landing in a directory are
 picked up per micro-batch, run through the SAME extraction kernel
-(mapInPandas is streaming-compatible), and appended to the extracted
+(mapInArrow is streaming-compatible), and appended to the extracted
 table; watermarked windowed aggregates provide the monitoring counts
 the reference's dashboard defines (``docs/monitoring.md:22-30``).
 
@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.extract import EXTRACTED_SCHEMA, _kernel_batches
+from ..operators.extract import EXTRACTED_SCHEMA, _kernel_batches_arrow
 
 TRANSCRIPT_SCHEMA = T.StructType(
     [
@@ -47,7 +47,7 @@ def stream_transcripts(spark: SparkSession, shard_dir: str,
 
 def extracted_stream(transcripts: DataFrame) -> DataFrame:
     """The SAME kernel as the batch path, applied incrementally."""
-    return transcripts.mapInPandas(_kernel_batches, schema=EXTRACTED_SCHEMA)
+    return transcripts.mapInArrow(_kernel_batches_arrow, schema=EXTRACTED_SCHEMA)
 
 
 def windowed_turn_counts(extracted: DataFrame, window: str = "1 minute",

@@ -72,8 +72,8 @@ def main() -> None:
 
     ext = extract_turns(tdisk.select("conv_id", "turn_idx", "role", "text", "tool", "ts"))
     add(
-        "Extraction kernel (salted mapInPandas)",
-        "ONE Exchange (the salted repartition) feeding MapInPandas; the scan "
+        "Extraction kernel (salted mapInArrow)",
+        "ONE Exchange (the salted repartition) feeding MapInArrow; the scan "
         "reads exactly the six input columns (ReadSchema), no extra shuffle "
         "before or after the kernel.",
         ext,

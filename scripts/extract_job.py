@@ -93,14 +93,11 @@ def main() -> None:
         if args.strategy == "skew-aware":
             extracted = extract_turns_skew_aware(
                 transcripts,
-                num_partitions=cores * 3,
                 salt=max(args.salt, 1),
                 heavy_turns=args.heavy_turns,
             )
         else:
-            extracted = extract_turns(
-                transcripts, num_partitions=cores * 3, salt=args.salt
-            )
+            extracted = extract_turns(transcripts, salt=args.salt)
         # ONE pass: write the extracted table (internal lineage columns
         # included — they are two narrow numerics).  Lineage then
         # aggregates from the written files with column pruning, and the

@@ -225,6 +225,22 @@ class TestResume:
         n2 = spark.read.parquet(os.path.join(out, "extracted")).count()
         assert n1 == n2
 
+    def test_lineage_has_one_kernel_task_per_core(
+        self, spark, small_corpus, tmp_path_factory
+    ):
+        """Every wave runs one kernel task per core, so every lineage
+        partition id lies in [0, defaultParallelism), and the lineage
+        counts each input row once."""
+        src = spark.read.parquet(small_corpus)
+        out = str(tmp_path_factory.mktemp("ckpt-lin") / "run")
+        run_checkpointed_extraction(spark, src, out, n_buckets=4, wave_size=2)
+        lin = spark.read.parquet(os.path.join(out, "lineage"))
+        lo, hi, rows_in = lin.agg(
+            F.min("partition_id"), F.max("partition_id"), F.sum("rows_in")
+        ).first()
+        assert 0 <= lo and hi < spark.sparkContext.defaultParallelism
+        assert rows_in == src.count()
+
 
 class TestReporting:
     def test_date_partitioned_layout(self, spark, small_corpus, tmp_path_factory):

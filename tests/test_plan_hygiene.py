@@ -30,6 +30,13 @@ def _plan(df) -> str:
     return buf.getvalue()
 
 
+def _one_turn(spark):
+    return spark.createDataFrame(
+        [("c1", 0, "user", "<p>hello world</p>", None, None)],
+        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+    )
+
+
 def _repeated_hof_subtrees(optimized: str) -> dict[str, int]:
     """Substantial higher-order-function subtrees appearing 2+ times in
     an optimized plan.  HOF lambdas are outside Catalyst CSE and
@@ -102,10 +109,7 @@ def test_salted_extraction_has_exactly_one_exchange(spark):
         extract_turns,
     )
 
-    t = spark.createDataFrame(
-        [("c1", 0, "user", "<p>hello world</p>", None, None)],
-        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
-    )
+    t = _one_turn(spark)
     import re
 
     plan = _plan(extract_turns(t, num_partitions=4, salt=8))
@@ -115,15 +119,30 @@ def test_salted_extraction_has_exactly_one_exchange(spark):
     assert n_exchanges == 1, plan
 
 
+def test_salted_extraction_defaults_to_one_task_per_core(spark):
+    """Without ``num_partitions`` the salted repartition makes one
+    kernel task per core: each Python task pays a fixed worker set-up,
+    so more tasks than cores only add that cost (NOTES.md)."""
+    from accelerated_intelligent_document_processing_on_aws_spark.operators.extract import (
+        extract_turns,
+    )
+
+    t = _one_turn(spark)
+    plan = _plan(extract_turns(t, salt=8))
+    counts = re.findall(
+        r"hashpartitioning\(xxhash64\(conv_id#\d+, 42\), pmod\(turn_idx#\d+, 8\), (\d+)\)",
+        plan,
+    )
+    assert counts, plan
+    assert {int(c) for c in counts} == {spark.sparkContext.defaultParallelism}, plan
+
+
 def test_zero_shuffle_extraction_has_no_exchange(spark):
     from accelerated_intelligent_document_processing_on_aws_spark.operators.extract import (
         extract_turns,
     )
 
-    t = spark.createDataFrame(
-        [("c1", 0, "user", "<p>hello world</p>", None, None)],
-        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
-    )
+    t = _one_turn(spark)
     plan = _plan(extract_turns(t, salt=0))
     assert "Exchange" not in plan, plan
 

@@ -59,6 +59,30 @@ class TestStreamingIngest:
         q2.awaitTermination(120)
         assert spark.read.parquet(out).count() == total
 
+    def test_stream_equals_batch_extraction(self, spark, tmp_path):
+        """The streamed extraction is batch ``extract_turns`` row for
+        row on every extracted column."""
+        from accelerated_intelligent_document_processing_on_aws_spark.operators.extract import (
+            drop_internal,
+            extract_turns,
+        )
+
+        shard_dir = str(tmp_path / "shards")
+        out = str(tmp_path / "out")
+        total = _write_shards(spark, shard_dir)
+        q = streaming.run_stream_to_parquet(
+            streaming.stream_transcripts(spark, shard_dir), out,
+            str(tmp_path / "ckpt"), once=True,
+        )
+        q.awaitTermination(180)
+
+        batch = drop_internal(extract_turns(spark.read.parquet(shard_dir)))
+        cols = batch.columns
+        got = spark.read.parquet(out).select(*cols).orderBy("conv_id", "turn_idx").collect()
+        want = batch.orderBy("conv_id", "turn_idx").collect()
+        assert len(got) == total
+        assert got == want
+
     def test_windowed_counts_plan(self, spark, tmp_path):
         shard_dir = str(tmp_path / "shards2")
         _write_shards(spark, shard_dir, n_shards=1)
