@@ -616,19 +616,25 @@ def simhash_pairs(
     beyond that the banding degrades toward all-pairs and a warning is
     the caller's cue to rethink the threshold.
 
-    ``overflow`` decides what happens to buckets ABOVE
-    ``max_bucket_size`` (round-3; round 2 always dropped them, trading
-    the pigeonhole guarantee for memory safety):
+    Every bucket, whatever its size, goes through ONE 2-D salted
+    self-join on (chunk_idx, chunk): members are split into groups of
+    about 256 and each unordered pair meets at exactly one group pair,
+    so a task does at most 256² hamming evaluations per key however
+    degenerate the bucket.  The O(n²) candidate volume of a truly
+    degenerate bucket is inherent to the semantics (those pairs exist);
+    run exact dedup first if byte-identical floods are expected.
 
-    - ``'join'`` (default): over-cap buckets route through a self-join
-      on (chunk_idx, chunk) — no aggregation buffer ever holds the
-      bucket, and AQE's skew-join splits the hot partitions, so memory
-      stays bounded WITHOUT losing the recall guarantee.  The O(n²)
-      candidate volume of a truly degenerate bucket is inherent to the
-      semantics (those pairs exist); run exact dedup first if
-      byte-identical floods are expected.
-    - ``'drop'``: the round-2 behavior — over-cap buckets vanish; pairs
-      that agree on another, selective chunk still surface."""
+    ``max_bucket_size`` acts only under ``overflow='drop'``:
+
+    - ``'join'`` (default): ``max_bucket_size`` does nothing; buckets of
+      every size are joined and the pigeonhole recall guarantee holds.
+    - ``'drop'``: buckets above ``max_bucket_size`` vanish (the round-2
+      behavior, trading recall for bounded candidate volume); pairs
+      that agree on another, selective chunk still surface.
+
+    The fingerprint/bucket frame is referenced by both join sides and is
+    lazily ``localCheckpoint``-ed; its blocks stay in executor storage
+    until the session ends (nothing unpersists them)."""
     if overflow not in ("join", "drop"):
         raise ValueError("overflow must be 'join' or 'drop'")
     if max_hamming < 0:

@@ -24,15 +24,20 @@ Scale design (100 TB / 10^12 turns):
   and amortized per-row latency; :func:`lineage` aggregates them into
   the north-rule lineage table (partition_id, rows_in, rows_out,
   extract_ms) — the analog of the reference's metering capture
-  (``reporting/save_reporting_data.py:1084-1097``).
+  (``reporting/save_reporting_data.py:1084-1097``).  A checkpoint wave
+  (:func:`extract_wave`) instead counts the same table inside the
+  kernel task, into an accumulator, so it needs no second pass over
+  its output.
 """
 
 from __future__ import annotations
 
 import time
+from collections import Counter
+from functools import partial
 
 import pandas as pd
-from pyspark import TaskContext
+from pyspark import AccumulatorParam, TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -68,12 +73,41 @@ EXTRACTED_SCHEMA = T.StructType(
     ]
 )
 
+KERNEL_COLUMNS = ("conv_id", "turn_idx", "role", "text", "tool", "ts")
 
-def _kernel_batches_arrow(batches):
+# A checkpoint wave's kernel output: the extracted columns and the
+# passed-through checkpoint bucket.  The per-row lineage columns are
+# replaced by the wave's lineage tally.
+WAVE_SCHEMA = T.StructType(
+    EXTRACTED_SCHEMA.fields[:-2] + [T.StructField("bucket", T.IntegerType())]
+)
+
+
+class _LineageTallyParam(AccumulatorParam):
+    """Sums ``{(bucket, partition_id): (rows_in, rows_out, extract_ms)}``
+    dicts key by key."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, acc, update):
+        for key, (n_in, n_out, ms) in update.items():
+            a_in, a_out, a_ms = acc.get(key, (0, 0, 0.0))
+            acc[key] = (a_in + n_in, a_out + n_out, a_ms + ms)
+        return acc
+
+
+def _kernel_batches_arrow(batches, tally=None):
     """The ``mapInArrow`` kernel wrapper: runs :func:`extract_turn_raw`
     per turn and builds the output RecordBatch with pyarrow directly,
     spans assembled as flat struct arrays (no per-span dict, no pandas
-    object columns)."""
+    object columns).
+
+    With ``tally`` (the accumulator of :func:`extract_wave`) the input also
+    carries the checkpoint ``bucket``: each batch passes it through in
+    place of the per-row ``_partition_id``/``_row_ms`` columns
+    (:data:`WAVE_SCHEMA`) and adds its per-``(bucket, partition_id)``
+    lineage counts to ``tally``."""
     import pyarrow as pa
 
     ctx = TaskContext.get()
@@ -128,24 +162,34 @@ def _kernel_batches_arrow(batches):
             ),
         )
         row_ms = (time.perf_counter() - t0) * 1000.0 / n
-        yield pa.RecordBatch.from_arrays(
-            [
-                col["conv_id"],
-                col["turn_idx"],
-                col["role"],
-                col["tool"],
-                col["ts"],
-                pa.array(ex_kind, pa.string()),
-                pa.array(ex_text, pa.string()),
-                span_arr,
-                pa.array(ex_cls, pa.string()),
-                pa.array(ex_bnd, pa.string()),
-                pa.array(ex_conf, pa.float64()),
-                pa.array([pid] * n, pa.int32()),
-                pa.array([row_ms] * n, pa.float64()),
-            ],
-            names=[f.name for f in EXTRACTED_SCHEMA.fields],
-        )
+        out = [
+            col["conv_id"],
+            col["turn_idx"],
+            col["role"],
+            col["tool"],
+            col["ts"],
+            pa.array(ex_kind, pa.string()),
+            pa.array(ex_text, pa.string()),
+            span_arr,
+            pa.array(ex_cls, pa.string()),
+            pa.array(ex_bnd, pa.string()),
+            pa.array(ex_conf, pa.float64()),
+        ]
+        if tally is None:
+            out += [pa.array([pid] * n, pa.int32()), pa.array([row_ms] * n, pa.float64())]
+            schema = EXTRACTED_SCHEMA
+        else:
+            out.append(col["bucket"])
+            schema = WAVE_SCHEMA
+            buckets = col["bucket"].to_pylist()
+            rows_out = Counter(b for b, t in zip(buckets, ex_text) if t is not None)
+            tally.add(
+                {
+                    (b, pid): (n_b, rows_out[b], row_ms * n_b)
+                    for b, n_b in Counter(buckets).items()
+                }
+            )
+        yield pa.RecordBatch.from_arrays(out, names=[f.name for f in schema.fields])
 
 
 def _salted_repartition(
@@ -190,10 +234,31 @@ def extract_turns(
     conversation, conv-sorted exports) — there the shuffle IS the skew
     defusal the north rule requires.
     """
-    df = transcripts.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
+    df = transcripts.select(*KERNEL_COLUMNS)
     if salt > 0:
         df = _salted_repartition(df, salt, num_partitions)
     return df.mapInArrow(_kernel_batches_arrow, schema=EXTRACTED_SCHEMA)
+
+
+def extract_wave(part: DataFrame, salt: int = 16):
+    """:func:`extract_turns` for one checkpoint wave.  ``part`` carries
+    the wave's ``bucket`` column; the kernel passes it through
+    (:data:`WAVE_SCHEMA`) and counts the wave's lineage into an
+    accumulator as it builds each batch, so the wave's output is read
+    once, by its write.
+
+    Returns ``(extracted, tally)``.  ``tally.value`` maps ``(bucket,
+    partition_id)`` to ``(rows_in, rows_out, extract_ms)``, the columns
+    of :func:`lineage` before rounding.  It is complete once an action
+    over ``extracted`` has finished, and counts each row once only if no
+    shuffle follows the kernel in that action's plan (see
+    ``sources/checkpoint.py``)."""
+    tally = part.sparkSession.sparkContext.accumulator({}, _LineageTallyParam())
+    df = part.select(*KERNEL_COLUMNS, "bucket")
+    if salt > 0:
+        df = _salted_repartition(df, salt, None)
+    kernel = partial(_kernel_batches_arrow, tally=tally)
+    return df.mapInArrow(kernel, schema=WAVE_SCHEMA), tally
 
 
 def extract_turns_skew_aware(
@@ -223,7 +288,7 @@ def extract_turns_skew_aware(
     Window.partitionBy(conv_id).orderBy(turn_idx) restore) — asserted
     by tests/test_pipeline_spark.py's skew-aware equivalence test.
     """
-    df = transcripts.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
+    df = transcripts.select(*KERNEL_COLUMNS)
     # lazy localCheckpoint: the conv_id-count subtree is referenced by
     # BOTH branches — without it the plan evaluates the counting
     # aggregate twice (the multiply-referenced-subtree trap from the

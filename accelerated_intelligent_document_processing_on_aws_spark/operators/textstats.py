@@ -380,7 +380,11 @@ def unigram_logppl(
     no row (both engines drop them in the inner join).  Reference
     analog: the assessment stage's per-document confidence scoring
     (``assessment/service.py``) re-expressed as a corpus-statistics
-    quality signal."""
+    quality signal.
+
+    The per-(doc, token) fold is lazily ``localCheckpoint``-ed; its
+    blocks stay in executor storage until the session ends (nothing
+    unpersists them)."""
     from ..sources.tables import spread_scan
 
     # round 8 (the bigram prefold pattern, applied here first): fold
@@ -469,7 +473,11 @@ def bigram_logppl(
     no row (both engines drop them in the inner join).  Reference
     analog: the assessment stage's per-document confidence signal
     (``idp_common/assessment/service.py``), replaced by a corpus-
-    statistics language-model score as ``unigram_logppl`` documents."""
+    statistics language-model score as ``unigram_logppl`` documents.
+
+    The per-(doc, pair) fold is lazily ``localCheckpoint``-ed; its
+    blocks stay in executor storage until the session ends (nothing
+    unpersists them)."""
     from ..sources.tables import spread_scan
 
     toks = spread_scan(docs).select(

@@ -1394,12 +1394,18 @@ def duplicate_ngram_spans(spark, sf_dir):
     "Deduplicating Training Data Makes Language Models Better"): a
     5-token gram occurring in 2+ places marks a duplicated span; a
     document's ``dup_gram_frac`` is the share of its grams that are
-    globally repeated.  Plan: explode positional gram hashes (16-byte
-    md5, never the text), ONE gram-key aggregate, broadcast-free
-    re-join by gram key, per-doc rollup — two shuffles total, both on
-    hashes.  At 10^12 turns the gram agg is the big one; it is a plain
-    hash aggregate (map-side combine absorbs within-partition repeats),
-    and the join input carries (gram, doc_id) only."""
+    globally repeated.  Plan: explode positional gram keys (8-byte
+    ``xxhash64`` of the gram, never the text), ONE window count over the
+    gram key, per-doc rollup — two shuffles total, carrying (gram key,
+    doc_id) only.
+
+    Gram keys are 64-bit, so distinct grams can collide, and a
+    collision only over-counts: both grams read as repeated.  With
+    ``m`` distinct grams the expected number of colliding pairs is about
+    ``m² / 2^65``: ~0.03 at 10^9, even odds of one collision near
+    5·10^9, and ~27,000 pairs at 10^12 — at that scale up to ~5·10^4
+    grams (~5·10^-8 of them) are wrongly marked duplicated.  A 128-bit
+    key (two seeded hashes) would be needed for exact counts there."""
     from ..sources.tables import spread_scan
 
     # round 8: (a) spread the scan — tokenize + gram assembly is the
@@ -1408,7 +1414,7 @@ def duplicate_ngram_spans(spark, sf_dir):
     # never compared cross-engine), so an 8-byte xxhash64 replaces the
     # 32-char md5 hex — 4x fewer key bytes through the window exchange
     # and a cheaper hash (the exact_substring r7 drill precedent;
-    # counts are identical barring a ~2^-64-probability collision)
+    # the collision bound is in the docstring)
     docs = spread_scan(_t(spark, sf_dir, "documents"))
     n = 5
     toks = docs.select(

@@ -5,15 +5,23 @@ DynamoDB keyed ``classcache#{doc}#{workflow}`` and skipping completed
 stages (``classification/service.py:1627-1778``;
 ``patterns/pattern-2/src/classification_function/index.py:60-80``).
 The Spark-native restatement: conversations hash into ``n_buckets``
-fixed buckets; the job processes buckets in waves, writes each wave
-with dynamic partition overwrite (idempotent — a re-run of a wave
-replaces, never duplicates), and appends the bucket ids to a manifest
+fixed buckets; the job processes buckets in waves, replaces each
+wave's bucket partitions (idempotent — a re-run of a wave replaces,
+never duplicates), and appends the bucket ids to a manifest
 only after the write commits.  Resume = set difference on the manifest,
 i.e. a driver-side anti-join on a tiny key set.  With an Iceberg
 catalog the manifest becomes snapshot metadata; the API is unchanged.
 
 This mirrors at-least-once Lambda + idempotent S3 overwrite semantics
 while keeping recovery O(pending work), not O(corpus).
+
+A wave is one Spark write job after the scan's salted shuffle
+(:func:`_write_wave`): the kernel passes the wave's ``bucket`` column
+through, so it is hashed once per row, and counts the wave's lineage
+into an accumulator while it runs in the write's result stage.  Nothing
+is cached and the output is not read back; the driver then writes the
+wave's lineage rows to ``lineage/bucket=K/`` with pyarrow, beside the
+manifest it already writes.
 """
 
 from __future__ import annotations
@@ -21,11 +29,13 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from collections import defaultdict
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.extract import drop_internal, extract_turns, lineage
+from ..operators.extract import drop_internal, extract_turns, extract_wave
 
 MANIFEST = "_manifest.json"
 
@@ -211,6 +221,77 @@ def replay_deletions(spark: SparkSession, out_dir: str) -> dict:
     return delete_conversations(spark, out_dir, all_ids)
 
 
+def _write_lineage(out_dir: str, tally: dict) -> None:
+    """Write a wave's lineage, one parquet file per bucket under
+    ``lineage/bucket=K/``: the columns and types a Spark
+    ``partitionBy("bucket")`` write of ``operators.extract.lineage``
+    gives (``partition_id int, rows_in bigint, rows_out bigint,
+    extract_ms double, ts timestamp``, ``bucket`` from the directory).
+    ``tally`` is the value of the accumulator
+    :func:`~..operators.extract.extract_wave` returns; ``ts`` is the
+    driver's time at the end of the wave.  Each file is renamed into
+    place from a hidden temporary, so a crash leaves no partial file
+    that a reader of ``lineage/`` would see."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ts = datetime.now(timezone.utc)
+    rows = defaultdict(list)
+    for (bucket, pid), (n_in, n_out, ms) in sorted(tally.items()):
+        rows[bucket].append((pid, n_in, n_out, round(ms, 3)))
+    for bucket, bucket_rows in rows.items():
+        pid, n_in, n_out, ms = zip(*bucket_rows)
+        table = pa.table(
+            {
+                "partition_id": pa.array(pid, pa.int32()),
+                "rows_in": pa.array(n_in, pa.int64()),
+                "rows_out": pa.array(n_out, pa.int64()),
+                "extract_ms": pa.array(ms, pa.float64()),
+                "ts": pa.array([ts] * len(pid), pa.timestamp("us", tz="UTC")),
+            }
+        )
+        part_dir = os.path.join(out_dir, "lineage", f"bucket={bucket}")
+        os.makedirs(part_dir, exist_ok=True)
+        tmp = os.path.join(part_dir, ".part-00000.parquet.tmp")
+        pq.write_table(table, tmp, store_schema=False)
+        os.replace(tmp, os.path.join(part_dir, "part-00000.parquet"))
+
+
+def _write_wave(
+    spark: SparkSession,
+    src: DataFrame,
+    wave: list[int],
+    out_dir: str,
+    dest: str,
+    partition_col: str,
+    salt: int,
+) -> None:
+    """Extract one wave of buckets and write it to ``dest``, partitioned
+    by ``partition_col`` (``bucket`` itself, or a column copied from
+    it), then write the wave's lineage.  ``src`` carries the ``bucket``
+    column.  The wave's partition directories under ``dest`` and
+    ``lineage/`` are removed first, so a re-run of the wave replaces
+    what an earlier attempt wrote.
+
+    The lineage counts come from the kernel tasks of the write job
+    itself.  Each is counted exactly once because the kernel runs in the
+    write's result stage (the salted shuffle is below it, and the write
+    adds only a local sort): the DAGScheduler applies a result task's
+    accumulator updates only when that partition first completes, and
+    drops those of failed attempts, so a retried or speculative kernel
+    task adds nothing twice.  A shuffle between the kernel and the write
+    would break this, since a map task reruns when its output is lost
+    and its updates count again."""
+    for b in wave:
+        shutil.rmtree(os.path.join(dest, f"{partition_col}={b}"), ignore_errors=True)
+        shutil.rmtree(os.path.join(out_dir, "lineage", f"bucket={b}"), ignore_errors=True)
+    extracted, tally = extract_wave(src.where(F.col("bucket").isin(wave)), salt=salt)
+    if partition_col != "bucket":
+        extracted = extracted.withColumn(partition_col, F.col("bucket"))
+    extracted.write.mode("append").partitionBy(partition_col).parquet(dest)
+    _write_lineage(out_dir, tally.value)
+
+
 def run_checkpointed_extraction(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -239,27 +320,10 @@ def run_checkpointed_extraction(
     for wi, wave in enumerate(waves):
         if fail_after_waves is not None and wi >= fail_after_waves:
             raise RuntimeError("injected crash for resume test")
-        part = src.where(F.col("bucket").isin(wave)).drop("bucket")
-        extracted = extract_turns(part, salt=salt).withColumn(
-            "bucket", bucket_col(n_buckets)
+        # idempotent overwrite of exactly this wave's bucket partitions
+        _write_wave(
+            spark, src, wave, out_dir, os.path.join(out_dir, "extracted"), "bucket", salt
         )
-        # Idempotent overwrite of exactly this wave's bucket partitions.
-        for b in wave:
-            for sub in ("extracted", "lineage"):
-                shutil.rmtree(os.path.join(out_dir, sub, f"bucket={b}"), ignore_errors=True)
-        extracted.cache()
-        drop_internal(extracted).write.mode("append").partitionBy("bucket").parquet(
-            os.path.join(out_dir, "extracted")
-        )
-        # lineage rows carry their REAL bucket (grouped by it) so the
-        # lineage partition layout matches the extracted table — round 1
-        # wrote the whole wave under bucket=min(wave), leaving the other
-        # wave members' lineage partitions empty
-        lin = lineage(extracted, by=("bucket",))
-        lin.write.mode("append").partitionBy("bucket").parquet(
-            os.path.join(out_dir, "lineage")
-        )
-        extracted.unpersist()
         done.update(wave)
         manifest["done_buckets"] = sorted(done)
         _write_manifest(out_dir, manifest, operation=f"wave:{sorted(wave)}")
@@ -400,34 +464,17 @@ def run_versioned_extraction(
         if fail_after_waves is not None and wi >= fail_after_waves:
             raise RuntimeError("injected crash for resume test")
         sid_next = int(manifest.get("snapshot_id", 0)) + 1
-        part = src.where(F.col("bucket").isin(wave)).drop("bucket")
-        extracted = (
-            extract_turns(part, salt=salt)
-            .withColumn("bucket", bucket_col(n_buckets))
-            .withColumn("bucket_pt", bucket_col(n_buckets))
-        )
-        extracted.cache()
         # bucket_pt drives the directory layout; bucket stays a REGULAR
         # column inside the files so a multi-path snapshot read needs no
-        # partition-discovery basePath gymnastics.
-        drop_internal(extracted).write.mode("overwrite").partitionBy(
-            "bucket_pt"
-        ).parquet(os.path.join(out_dir, "data", f"v={sid_next}"))
-        # clear the wave's prior lineage partitions before the append
-        # (mirroring run_checkpointed_extraction): a wave RE-RUN —
-        # rollback_to_snapshot + resume, or a crash between this append
-        # and the manifest commit — must not duplicate lineage rows
-        # (r7 ADVICE: reproduced growing 24 → 36 rows).
-        for b in wave:
-            shutil.rmtree(
-                os.path.join(out_dir, "lineage", f"bucket={b}"),
-                ignore_errors=True,
-            )
-        lin = lineage(extracted.drop("bucket_pt"), by=("bucket",))
-        lin.write.mode("append").partitionBy("bucket").parquet(
-            os.path.join(out_dir, "lineage")
+        # partition-discovery basePath gymnastics.  A wave RE-RUN —
+        # rollback_to_snapshot + resume, or a crash before the manifest
+        # commit — replaces the wave's partitions of this sid's orphaned
+        # directory and its lineage partitions, so lineage rows are
+        # never duplicated (r7 ADVICE: reproduced growing 24 → 36 rows).
+        _write_wave(
+            spark, src, wave, out_dir,
+            os.path.join(out_dir, "data", f"v={sid_next}"), "bucket_pt", salt,
         )
-        extracted.unpersist()
         done.update(wave)
         for b in wave:
             # record only locations partitionBy actually created — a

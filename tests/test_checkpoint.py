@@ -8,12 +8,15 @@ from pyspark.sql import functions as F
 from accelerated_intelligent_document_processing_on_aws_spark.operators.extract import (
     drop_internal,
     extract_turns,
+    lineage,
 )
 from accelerated_intelligent_document_processing_on_aws_spark.sources import reporting
 from accelerated_intelligent_document_processing_on_aws_spark.sources.checkpoint import (
+    bucket_col,
     read_manifest,
     resume_pending,
     run_checkpointed_extraction,
+    run_versioned_extraction,
 )
 
 
@@ -240,6 +243,86 @@ class TestResume:
         ).first()
         assert 0 <= lo and hi < spark.sparkContext.defaultParallelism
         assert rows_in == src.count()
+
+
+LINEAGE_KEY = ["bucket", "partition_id", "rows_in", "rows_out"]
+
+
+class TestWaveLineage:
+    """A wave counts its lineage inside the kernel task of its one write
+    job; the rows must be those ``lineage()`` aggregates from the
+    extracted frame, with the same schema."""
+
+    @pytest.mark.parametrize(
+        "writer", [run_checkpointed_extraction, run_versioned_extraction]
+    )
+    def test_lineage_equals_aggregated_lineage_across_resume(
+        self, spark, small_corpus, tmp_path, writer
+    ):
+        src = spark.read.parquet(small_corpus)
+        out = str(tmp_path / "run")
+        kw = dict(n_buckets=8, wave_size=3, salt=4)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            writer(spark, src, out, fail_after_waves=1, **kw)
+        writer(spark, src, out, **kw)
+        got = spark.read.parquet(os.path.join(out, "lineage"))
+        # a row's kernel partition depends only on the row, so one
+        # extraction of the whole corpus has the waves' lineage
+        want = lineage(
+            extract_turns(src, salt=4).withColumn("bucket", bucket_col(8)),
+            by=("bucket",),
+        )
+        assert sorted(map(tuple, got.select(LINEAGE_KEY).collect())) == sorted(
+            map(tuple, want.select(LINEAGE_KEY).collect())
+        )
+        assert got.agg(F.sum("rows_in")).first()[0] == src.count()
+
+    def test_lineage_schema_unchanged(self, spark, small_corpus, tmp_path):
+        out = str(tmp_path / "run")
+        run_checkpointed_extraction(
+            spark, spark.read.parquet(small_corpus), out, n_buckets=4, wave_size=4
+        )
+        assert spark.read.parquet(os.path.join(out, "lineage")).dtypes == [
+            ("partition_id", "int"),
+            ("rows_in", "bigint"),
+            ("rows_out", "bigint"),
+            ("extract_ms", "double"),
+            ("ts", "timestamp"),
+            ("bucket", "int"),
+        ]
+
+    def test_one_wave_is_one_write_job(
+        self, spark, small_corpus, tmp_path, monkeypatch
+    ):
+        """A one-wave run starts the scan's shuffle job and the write job,
+        nothing else: no cache build, no re-read of the output, no
+        lineage aggregate.  Two jobs also means no shuffle sits between
+        the kernel and the write (AQE runs each shuffle stage as its own
+        job), so the kernel's lineage counts come from result tasks."""
+        from pyspark.sql.readwriter import DataFrameWriter
+
+        plans = []
+        write = DataFrameWriter.parquet
+
+        def recording_write(self, path, *args, **kwargs):
+            plans.append(self._df._jdf.queryExecution().optimizedPlan().toString())
+            return write(self, path, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", recording_write)
+        sc = spark.sparkContext
+        src = spark.read.parquet(small_corpus)
+        persisted = set(sc._jsc.getPersistentRDDs().keys())
+        group = "one-wave-checkpoint"
+        sc.setJobGroup(group, "one checkpoint wave")
+        try:
+            run_checkpointed_extraction(
+                spark, src, str(tmp_path / "run"), n_buckets=4, wave_size=4
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+        assert set(sc._jsc.getPersistentRDDs().keys()) == persisted
+        assert len(plans) == 1 and "InMemoryRelation" not in plans[0]
 
 
 class TestReporting:
