@@ -457,7 +457,9 @@ def minhash_lsh_pairs(
         # the pair set is referenced three times below (verify join +
         # twice through cand_ids); it is tiny (collision candidates
         # only), so truncate lineage here and bound the signature
-        # pipeline to one evaluation
+        # pipeline to one evaluation.  The call runs the bucket and
+        # distinct exchanges (the signature kernel with them); the
+        # blocks stay in executor storage until the session ends.
         .localCheckpoint(eager=False)
     )
     # exact-Jaccard verify over CANDIDATE ids only.  Both the broadcast
@@ -468,9 +470,11 @@ def minhash_lsh_pairs(
     # shuffle) and the leg measured 1004-1117 s.  Broadcasting the
     # (small, candidates-only) id set turns the semi-join into a
     # broadcast hash join — the corpus text never shuffles — and the
-    # lazy localCheckpoint evaluates the candidate shingle sets ONCE
-    # (their storage is O(candidates × shingle bytes), bounded by the
-    # LSH collision count, not the corpus).
+    # localCheckpoint evaluates the candidate shingle sets ONCE (their
+    # storage is O(candidates × shingle bytes), bounded by the LSH
+    # collision count, not the corpus).  The call runs the cand_ids
+    # exchanges; the blocks stay in executor storage until the session
+    # ends.
     cand_ids = (
         cand.select(F.explode(F.array("id_a", "id_b")).alias("id")).distinct()
     )
@@ -633,8 +637,10 @@ def simhash_pairs(
       that agree on another, selective chunk still surface.
 
     The fingerprint/bucket frame is referenced by both join sides and is
-    lazily ``localCheckpoint``-ed; its blocks stay in executor storage
-    until the session ends (nothing unpersists them)."""
+    ``localCheckpoint(eager=False)``-ed.  That is not lazy under AQE:
+    the call runs the bucket window's exchange, and the fingerprint UDF
+    with it, while the plan is being built.  Its blocks stay in executor
+    storage until the session ends (nothing unpersists them)."""
     if overflow not in ("join", "drop"):
         raise ValueError("overflow must be 'join' or 'drop'")
     if max_hamming < 0:
@@ -721,8 +727,9 @@ def simhash_pairs(
     )
     # referenced twice (both join sides) — without materialization
     # Catalyst re-evaluates the scan + fingerprint UDF + window per
-    # reference.  A LAZY local checkpoint computes it once on first
-    # action and serves the other reference from executor storage.
+    # reference.  The local checkpoint computes it once and serves both
+    # references from executor storage; the call runs the window's
+    # exchange (and the fingerprint UDF) here, at plan-build time.
     sized = sized.localCheckpoint(eager=False)
     grp = F.pmod(F.xxhash64(F.col("id")), F.col("_ns")).cast("int")
     fan = F.explode(F.sequence(F.lit(0), F.col("_ns") - 1))
@@ -802,6 +809,8 @@ def duplicate_clusters(
     und = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
+    # eager checkpoints: both run a job now, and like every checkpoint
+    # below their blocks stay in executor storage until the session ends
     und = und.localCheckpoint()
     labels = (
         und.select(F.col("src").alias("id")).distinct().withColumn("label", F.col("id"))
@@ -826,13 +835,14 @@ def duplicate_clusters(
         hop = stepped.select(
             F.col("id").alias("_lid"), F.col("label").alias("_llabel")
         )
-        # LAZY checkpoint (round 8): the eager form ran one dedicated
-        # materialization job per round on top of the convergence-count
-        # job — lazy folds materialization into the next action touching
-        # the frame (the count below, or the following round's joins),
-        # halving the per-round job count while still truncating lineage
-        # at materialization time.  On a ~500k-turn chain corpus the
-        # component stage measured 4.6 s → ~2.8 s.
+        # eager=False (round 8): the eager form ran one more job per
+        # round to materialize the final stage; eager=False folds that
+        # stage into the next action touching the frame (the count
+        # below, or the following round's joins) while still truncating
+        # lineage.  It is not lazy: the call runs the round's join and
+        # aggregate exchanges, and every round's blocks stay in executor
+        # storage until the session ends.  On a ~500k-turn chain corpus
+        # the component stage measured 4.6 s → ~2.8 s.
         new_labels = (
             stepped.join(hop, stepped.label == hop._lid, "left")
             .select(
@@ -1363,13 +1373,15 @@ def bloom_incremental_dedup(
     as the checkpoint anti-join's (``sources/checkpoint.py``)
     membership-accelerated form.
 
-    ``materialize=True`` (default) lazily localCheckpoints the probed
-    frame so the two consumers (novel fast path, verify join) share
-    ONE scan+probe evaluation — the same single-evaluation defense as
-    the repaired LSH carry=False leg (a filter on a pandas-UDF output
-    column otherwise re-plans the UDF per branch: two ArrowEvalPython
-    nodes, two input scans).  Set it False only when the input is
-    itself a cheap in-memory frame."""
+    ``materialize=True`` (default) localCheckpoints the probed frame
+    (``eager=False``; the call still runs any exchange in
+    ``incoming``'s plan, and the blocks stay in executor storage until
+    the session ends) so the two consumers (novel fast path, verify
+    join) share ONE scan+probe evaluation — the same single-evaluation
+    defense as the repaired LSH carry=False leg (a filter on a
+    pandas-UDF output column otherwise re-plans the UDF per branch: two
+    ArrowEvalPython nodes, two input scans).  Set it False only when the
+    input is itself a cheap in-memory frame."""
     import numpy as np
 
     k = int(np.frombuffer(bitmap[:8], dtype=np.uint64)[0])
@@ -1403,6 +1415,7 @@ def bloom_incremental_dedup(
         ),
     )
     if materialize:
+        # blocks stay in executor storage until the session ends
         probed = probed.localCheckpoint(eager=False)
     novel_fast = probed.where(~F.col("_maybe")).drop("_maybe")
     survivors = (

@@ -289,10 +289,13 @@ def extract_turns_skew_aware(
     by tests/test_pipeline_spark.py's skew-aware equivalence test.
     """
     df = transcripts.select(*KERNEL_COLUMNS)
-    # lazy localCheckpoint: the conv_id-count subtree is referenced by
-    # BOTH branches — without it the plan evaluates the counting
-    # aggregate twice (the multiply-referenced-subtree trap from the
-    # minhash/simhash plans, NOTES round 3)
+    # localCheckpoint: the conv_id-count subtree is referenced by BOTH
+    # branches — without it the plan evaluates the counting aggregate
+    # twice (the multiply-referenced-subtree trap from the
+    # minhash/simhash plans, NOTES round 3).  eager=False is not lazy
+    # here: the call runs the aggregate's exchange (a scan of the
+    # input), and the blocks stay in executor storage until the session
+    # ends.
     heavy_ids = F.broadcast(
         df.groupBy("conv_id")
         .agg(F.count(F.lit(1)).alias("_n"))

@@ -382,9 +382,10 @@ def unigram_logppl(
     (``assessment/service.py``) re-expressed as a corpus-statistics
     quality signal.
 
-    The per-(doc, token) fold is lazily ``localCheckpoint``-ed; its
-    blocks stay in executor storage until the session ends (nothing
-    unpersists them)."""
+    The per-(doc, token) fold is ``localCheckpoint(eager=False)``-ed.
+    That is not lazy under AQE: the call runs the fold's exchanges
+    while the plan is being built.  Its blocks stay in executor storage
+    until the session ends (nothing unpersists them)."""
     from ..sources.tables import spread_scan
 
     # round 8 (the bigram prefold pattern, applied here first): fold
@@ -396,9 +397,10 @@ def unigram_logppl(
     # sf1; repetitive docs — the ones the score exists to catch — are
     # exactly the ones that blow up the occurrence-sized form).  The
     # folded frame feeds both the vocabulary and the scoring join, so
-    # it is lazily localCheckpointed — otherwise Catalyst re-tokenizes
-    # the corpus per reference.  n_tokens = Σ m and Σ m·q are the same
-    # integers as the per-occurrence sums, in any order.
+    # it is localCheckpointed — otherwise Catalyst re-tokenizes the
+    # corpus per reference.  The call runs the fold's exchanges.
+    # n_tokens = Σ m and Σ m·q are the same integers as the
+    # per-occurrence sums, in any order.
     folded = (
         spread_scan(docs)
         .select(
@@ -475,9 +477,10 @@ def bigram_logppl(
     (``idp_common/assessment/service.py``), replaced by a corpus-
     statistics language-model score as ``unigram_logppl`` documents.
 
-    The per-(doc, pair) fold is lazily ``localCheckpoint``-ed; its
-    blocks stay in executor storage until the session ends (nothing
-    unpersists them)."""
+    The per-(doc, pair) fold is ``localCheckpoint(eager=False)``-ed.
+    That is not lazy under AQE: the call runs the fold's exchanges
+    while the plan is being built.  Its blocks stay in executor storage
+    until the session ends (nothing unpersists them)."""
     from ..sources.tables import spread_scan
 
     toks = spread_scan(docs).select(
@@ -495,8 +498,8 @@ def bigram_logppl(
     # shrinks to one row per containing doc.  c2 aggregates FROM the
     # folded rows (weighted sum); Σ m and Σ m·q are the same integers
     # as the per-occurrence sums in any order.  The folded frame feeds
-    # c2 and the scoring join, so it is lazily localCheckpointed
-    # against double tokenization.
+    # c2 and the scoring join, so it is localCheckpointed against
+    # double tokenization.  The call runs the fold's exchanges.
     folded = (
         toks.where(F.size("_t") >= 2)
         .select(

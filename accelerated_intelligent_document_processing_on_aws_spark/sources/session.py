@@ -32,33 +32,6 @@ def get_spark(
         .master(master)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # scan-split floor (round 8): a multi-row-group file under
-        # maxPartitionBytes × cores still splits into too few tasks for
-        # the kernel-on-scan-partitions paths (the 190 MB / 107-row-group
-        # bench corpus scanned as 12 tasks on 32 cores — the salt=0 and
-        # skew-aware extraction legs ran at 1/3 parallelism).  The floor
-        # is derived from the core count (3×, from the round-2 kernel
-        # partition sweep), never a constant, so a cluster-scale scan
-        # with thousands of natural splits is untouched; single-row-group
-        # files keep their openCost floor (this knob cannot over-split
-        # tiny files).
-        .config(
-            "spark.sql.files.minPartitionNum",
-            os.environ.get("SPARK_SCAN_MIN_PARTITIONS", str(3 * cpus)),
-        )
-        # 2 MB open-cost (default 4 MB): with the floor above, split size
-        # is max(openCost, total/minPartitionNum) — the 4 MB default
-        # quantized the 190 MB bench corpus to 46 splits instead of ~96.
-        # 2 MB keeps the corpus at ~95 splits while halving the empty
-        # byte-range splits the floor creates on small single-row-group
-        # files (a split only reads row groups whose midpoint lands in
-        # it).  Local NVMe/tmpfs per-file open cost is microseconds; a
-        # cluster against object storage should raise this back
-        # (documented in OPTIMIZATION_r08.md).
-        .config(
-            "spark.sql.files.openCostInBytes",
-            os.environ.get("SPARK_SCAN_OPEN_COST", str(2 * 1024 * 1024)),
-        )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

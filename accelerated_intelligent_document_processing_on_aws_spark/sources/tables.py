@@ -31,21 +31,17 @@ DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # NOTE (round 8): do NOT "fix" the scan-split floor's empty splits
-    # on single-row-group files with a coalesce here.  coalesce(1)
-    # makes the scan's output partitioning SinglePartition, which
-    # SATISFIES any clustered-distribution requirement — Catalyst then
-    # ELIDES the downstream exchange and runs the entire
-    # window/aggregate single-task (measured: sections_bio_events
-    # 0.84 s → 2.49 s).  The empty splits themselves are parallel
-    # ~5 ms scheduler blips; the openCostInBytes=2 MB floor in
-    # sources/session.py bounds how many there are.
+    # NOTE: do NOT coalesce a single-row-group file's scan here.
+    # coalesce(1) makes the scan SinglePartition, which satisfies any
+    # clustered-distribution requirement, so Catalyst drops the
+    # downstream exchange and runs the whole window/aggregate in one
+    # task (measured: sections_bio_events 0.84 s → 2.49 s).
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def spread_scan(df: DataFrame, multiple: int = 1) -> DataFrame:
+def spread_scan(df: DataFrame) -> DataFrame:
     """Round-robin repartition of an UNDER-partitioned input up to the
-    session's default parallelism (× ``multiple``).
+    session's default parallelism.
 
     Single-row-group parquet files are unsplittable below file level, so
     a small fixture table scans as 1-2 partitions no matter what
@@ -61,7 +57,7 @@ def spread_scan(df: DataFrame, multiple: int = 1) -> DataFrame:
     narrow shuffle to unlock the cores.  Round-robin ``repartition(n)``
     keeps AQE from re-coalescing (user-specified partition counts are
     preserved; only ENSURE_REQUIREMENTS shuffles coalesce)."""
-    target = df.sparkSession.sparkContext.defaultParallelism * multiple
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)

@@ -1,0 +1,101 @@
+"""Scan partitioning: ``spread_scan`` and the kernel's tasks on a scan.
+
+The session leaves Spark's file-split defaults alone (split size from
+the input bytes over the core count, 4 MB open cost); ``spread_scan`` is
+the one mechanism that spreads an under-split scan."""
+
+import datetime
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from accelerated_intelligent_document_processing_on_aws_spark.fixtures import (
+    write_transcripts_parquet,
+)
+from accelerated_intelligent_document_processing_on_aws_spark.operators.extract import (
+    extract_turns,
+    lineage,
+)
+from accelerated_intelligent_document_processing_on_aws_spark.sources.tables import (
+    spread_scan,
+)
+
+
+@pytest.fixture(scope="module")
+def one_row_group(tmp_path_factory):
+    p = tmp_path_factory.mktemp("scan") / "one_rg.parquet"
+    n = write_transcripts_parquet(str(p), n_convs=20, seed=3, row_group_size=1 << 20)
+    assert pq.ParquetFile(str(p)).metadata.num_row_groups == 1
+    return str(p), n
+
+
+@pytest.fixture(scope="module")
+def many_row_groups(tmp_path_factory):
+    """~12.6 MB of uncompressed, incompressible text in 24 row groups.
+
+    Under a split floor of 3 splits per core with a 2 MB open cost this
+    scans as 7 non-empty splits on 4 cores; Spark's defaults make at
+    most one split per core."""
+    rng = np.random.default_rng(5)
+    n_rows, width = 3072, 4096
+    letters = np.frombuffer(b"abcdefghijklmnopqrstuvwxyz     ", dtype=np.uint8)
+    text = letters[rng.integers(0, len(letters), size=(n_rows, width))]
+    ts = datetime.datetime(2026, 1, 1, tzinfo=datetime.timezone.utc)
+    table = pa.table(
+        {
+            "conv_id": [f"c{i // 8:05d}" for i in range(n_rows)],
+            "turn_idx": pa.array([i % 8 for i in range(n_rows)], pa.int32()),
+            "role": ["user" if i % 2 else "assistant" for i in range(n_rows)],
+            "text": [row.tobytes().decode() for row in text],
+            "tool": pa.nulls(n_rows, pa.string()),
+            "ts": pa.array([ts] * n_rows, pa.timestamp("us", tz="UTC")),
+        }
+    )
+    p = tmp_path_factory.mktemp("scan") / "many_rg.parquet"
+    pq.write_table(table, str(p), compression="none", row_group_size=n_rows // 24)
+    return str(p), n_rows
+
+
+def test_single_row_group_spreads_to_default_parallelism(spark, one_row_group):
+    path, n = one_row_group
+    df = spark.read.parquet(path)
+    target = spark.sparkContext.defaultParallelism
+    assert df.rdd.getNumPartitions() < target
+    spread = spread_scan(df)
+    assert spread.rdd.getNumPartitions() == target
+    assert spread.count() == n
+
+
+@pytest.mark.parametrize("per_core", [1, 2])
+def test_partitioned_input_comes_back_unchanged(spark, per_core):
+    n = spark.sparkContext.defaultParallelism * per_core
+    df = spark.range(0, 1000, numPartitions=n)
+    assert spread_scan(df) is df
+
+
+def test_spread_scan_starts_no_job(spark, one_row_group):
+    sc = spark.sparkContext
+    under = spark.read.parquet(one_row_group[0])
+    wide = spark.range(0, 1000, numPartitions=sc.defaultParallelism)
+    group = "spread-scan-plan-time"
+    sc.setJobGroup(group, "spread_scan at plan time")
+    try:
+        spread_scan(under)
+        spread_scan(wide)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+def test_unsalted_kernel_runs_at_most_one_task_per_core(spark, many_row_groups):
+    """``salt=0`` runs the kernel on the scan partitions, so the scan's
+    split count is the number of Python tasks, each paying the worker
+    set-up.  A multi-row-group file must not scan as more than one
+    split per core."""
+    path, n = many_row_groups
+    rows = lineage(extract_turns(spark.read.parquet(path), salt=0)).collect()
+    assert sum(r["rows_in"] for r in rows) == n
+    tasks = {r["partition_id"] for r in rows}
+    assert len(tasks) <= spark.sparkContext.defaultParallelism
