@@ -1,13 +1,15 @@
-"""HTML main-content extraction: DOM parse + density heuristics.
+"""HTML main-content extraction: tag-stream scan + density heuristics.
 
 Analog of the reference's OCR text parse (Textract blocks → reading
 ordered markdown, ``lib/idp_common_pkg/idp_common/ocr/service.py:1603-1675``)
-restated for HTML transcript payloads: parse the DOM with the stdlib
-``html.parser``, split into leaf blocks, score each block with
-text-density and link-density heuristics (Kohlschuetter-style
-boilerplate detection), drop blocks under boilerplate containers
-(nav/header/footer/aside, ad/sidebar class hints), and emit the main
-content as newline-joined block texts plus per-block spans.
+restated for HTML transcript payloads.  No DOM is built: one regex
+split cuts the document into tags and text runs, a tag stack groups the
+runs into leaf blocks (entities decoded per run with ``html.unescape``),
+each block is scored with text-density and link-density heuristics
+(Kohlschuetter-style boilerplate detection), blocks under boilerplate
+containers (nav/header/footer/aside, ad/sidebar class hints) are
+dropped, and the main content is emitted as newline-joined block texts
+plus per-block spans.
 
 Pure function of the input string — no globals, no locale, no
 wall-clock — so Spark partitioning cannot perturb the output.
@@ -91,11 +93,15 @@ _FAST_TAG = re.compile(
     re.DOTALL,
 )
 _FAST_ATTR = re.compile(r"""(class|id)\s*=\s*(?:"([^"]*)"|'([^']*)'|(\S+))""", re.IGNORECASE)
-_RAWTEXT = ("script", "style")
-# raw-tag-name memo: name-as-written → (tag, drop, boiler, block, entry)
-# where entry is the premade stack tuple (tag, boiler, drop, block) for
-# the no-attr-hint case — ONE dict probe per tag event replaces the
-# lowercase memo + tag-class lookup + per-tag tuple allocation.
+# raw-text tag → (match of a tag body that closes it, search for its
+# close tag); ASCII-only case folding keeps offsets into the document
+_RAWTEXT = {
+    t: (re.compile("/" + t, re.I | re.A).match, re.compile("</" + t, re.I | re.A).search)
+    for t in ("script", "style")
+}
+# the reference's raw-tag-name memo: name-as-written → (tag, drop,
+# boiler, block, entry) where entry is the premade stack tuple (tag,
+# boiler, drop, block) for the no-attr-hint case.
 _TAG_META: dict = {}
 
 
@@ -112,17 +118,17 @@ def _scan_blocks_ref(html: str) -> list[_Block]:
     that artifact — a match starting inside the skipped region consumed
     text past it; hypothesis found the divergence).
     This is the SEMANTIC DEFINITION of the scan; :func:`_scan_blocks`
-    is the find-dispatch fast twin, gated by an equivalence test
-    (tests/test_tokenizer_equiv.py) on fixture + adversarial + random +
-    structured-nested inputs.  Block semantics are pinned by the kernel
-    snapshot test (tests/test_kernel.py)."""
+    is the split-driven fast twin, gated by equivalence tests
+    (tests/test_tokenizer_equiv.py, tests/test_tokenizer_recovery.py)
+    on fixture + adversarial + random + structured-nested inputs.
+    Block semantics are pinned by the kernel snapshot test
+    (tests/test_kernel.py)."""
     blocks: list[_Block] = []
     drop_depth = boiler_depth = link_depth = 0
     cur: _Block | None = None
     stack: list[tuple] = []
     pos = 0
     n = len(html)
-    lowered = None  # built at most ONCE, on the first raw-text element
     unescape = _html_mod.unescape
     tag_info = _TAG_INFO.get
 
@@ -226,12 +232,10 @@ def _scan_blocks_ref(html: str) -> list[_Block]:
             _end(tag)
         elif tag in _RAWTEXT:
             # raw-text elements: skip to the closing tag verbatim
-            if lowered is None:
-                lowered = html.lower()
-            close = lowered.find(f"</{tag}", pos)
-            if close < 0:
+            close = _RAWTEXT[tag][1](html, pos)
+            if close is None:
                 return blocks  # unterminated raw-text: drop the tail
-            gt = html.find(">", close)
+            gt = html.find(">", close.start())
             _end(tag)
             pos = n if gt < 0 else gt + 1
         m = search(html, pos)
@@ -249,51 +253,76 @@ def _scan_blocks_ref(html: str) -> list[_Block]:
     return blocks
 
 
-# Anchored helpers for the find-dispatch tokenizer: the tag alternative
-# of _FAST_TAG (for slow paths) and the comment/doctype/PI alternatives.
-_CAREFUL_TAG = re.compile(
-    r"<(/?)([a-zA-Z][a-zA-Z0-9:-]*)"
-    r"((?:\"[^\"]*\"|'[^']*'|[^>\"'])*?)"
-    r"(/?)>",
-    re.DOTALL,
-)
-_MISC_TAG = re.compile(r"<(?:!--.*?-->|![^>]*>|\?[^>]*>)", re.DOTALL)
-_PURE_NAME = re.compile(r"[a-zA-Z][a-zA-Z0-9:-]*\Z")
+# One capturing group holds a token's whole body, so ``re.split`` returns
+# a document as [data, body, data, body, ..., data] from one C call and a
+# token spans len(body) + 2 characters.  The alternatives and their order
+# are _FAST_TAG's, except that a tag body runs to the first '>': the
+# scanner checks its quotes (``_decode``).
+_SPLIT = re.compile(r"<(/?[a-zA-Z][^>]*|!--.*?--|![^>]*|\?[^>]*)>", re.DOTALL).split
 _NAME_PREFIX = re.compile(r"[a-zA-Z][a-zA-Z0-9:-]*")
-# full-slice open-tag memo: '<'+slice+'>' → the COMPLETE open decision
-# (tag, drop, boiler-with-attr-hint, block, stack entry, self_close).
+# tag body → its decoded action: "" for a comment/doctype/PI, the tag for
+# an end tag, else the COMPLETE open decision (tag, drop, boiler-with-
+# attr-hint, block, stack entry, self_close, raw-text patterns or None).
 # Real corpora repeat a small set of templated tags (class attrs
-# included), so repeated opens collapse to one dict probe — the attr
-# regex and boilerplate-hint search run once per distinct tag string.
+# included), so a token costs one dict probe; the attr regex and the
+# boilerplate-hint search run once per distinct tag string.
 _OPEN_MEMO: dict = {}
 
 
+def _decode(body: str):
+    """The action of one token body, or None where only the reference
+    grammar can decide: mixed or odd quotes (a quoted '>' extends the
+    tag, an unterminated quote voids it).  Balanced same-kind quotes can
+    do neither, since the body holds no '>'."""
+    if body[0] in "!?":
+        return ""
+    dq, sq = body.count('"'), body.count("'")
+    if (dq and sq) or dq % 2 or sq % 2:
+        return None
+    end = body[0] == "/"
+    m = _NAME_PREFIX.match(body, end)
+    tag = m.group().lower()
+    if end:
+        return tag
+    drop, boiler, block = _TAG_INFO.get(tag, _NO_INFO)
+    rest = body[m.end() :]
+    self_close = rest.endswith("/")
+    blob = rest[:-1] if self_close else rest
+    if (
+        blob
+        and not boiler
+        and ("class" in blob or "id" in blob or "ID" in blob or "CLASS" in blob)
+    ):
+        attr_text = " ".join(
+            (am.group(2) or am.group(3) or am.group(4) or "")
+            for am in _FAST_ATTR.finditer(blob)
+        )
+        boiler = bool(attr_text and _BOILERPLATE_HINT.search(attr_text))
+    raw = None if self_close else _RAWTEXT.get(tag)
+    return (tag, drop, boiler, block, (tag, boiler, drop, block), self_close, raw)
+
+
 def _scan_blocks(html: str) -> list[_Block]:
-    """Find-dispatch tokenizer: byte-equivalent fast twin of
+    """Split-driven tokenizer: byte-equivalent fast twin of
     :func:`_scan_blocks_ref`.
 
-    ``str.find('<')`` locates each candidate token and one character
-    dispatches it; the common cases — ``</name>`` end tags and
-    ``<name>`` / ``<name attrs>`` opens without quoted attributes —
-    run on C-level ``find``/slice/dict-get with ZERO regex match
-    objects.  Quoted-attribute opens, end tags with junk, comments,
-    doctypes and PIs fall back to anchored regexes with exactly the
-    reference grammar (a quoted '>' extends the tag; an unterminated
-    quote or missing '>' voids it, leaving '<' as data).  Equivalence
-    with the reference tokenizer is CI-gated over the fixture corpus,
-    adversarial cases, and random tag soup
-    (tests/test_tokenizer_equiv.py)."""
+    One ``re.split`` yields the document's (tag body, data) stream and
+    one ``_OPEN_MEMO`` probe decodes each token.  A raw-text element
+    whose text holds no '<' closes at the next token; otherwise its
+    close tag is found as the reference finds it and the tail after it
+    is split again.  A tag whose quotes only the reference grammar can
+    resolve sends the whole document to :func:`_scan_blocks_ref`.
+    Equivalence is CI-gated over the fixture corpus, adversarial cases
+    and random tag soup (tests/test_tokenizer_equiv.py,
+    tests/test_tokenizer_recovery.py)."""
     blocks: list[_Block] = []
     drop_depth = boiler_depth = link_depth = 0
     cur: _Block | None = None
     stack: list[tuple] = []
-    pos = 0
-    scan = 0
     n = len(html)
-    lowered = None
     unescape = _html_mod.unescape
-    tag_info = _TAG_INFO.get
-    find = html.find
+    memo = _OPEN_MEMO
+    get = memo.get
 
     def _end(tag: str) -> None:
         nonlocal drop_depth, boiler_depth, link_depth, cur
@@ -312,155 +341,87 @@ def _scan_blocks(html: str) -> list[_Block]:
             if t == tag:
                 break
 
-    tm = _TAG_META
-    while True:
-        lt = find("<", scan)
-        if lt < 0:
-            break
-        nc = html[lt + 1 : lt + 2]
-        if nc == "/":
-            # ---- end tag ------------------------------------------------
-            gt = find(">", lt + 2)
-            if gt < 0:
-                scan = lt + 1
-                continue
-            nm = html[lt + 2 : gt]
-            meta = tm.get(nm)
-            if meta is None:
-                if _PURE_NAME.match(nm):
-                    tag = nm.lower()
-                    drop, boiler, block = tag_info(tag, _NO_INFO)
-                    meta = (tag, drop, boiler, block, (tag, boiler, drop, block))
-                    if len(tm) < 4096:
-                        tm[nm] = meta
+    toks = _SPLIT(html)
+    while toks:
+        toks.insert(0, "!")  # a doctype body makes the leading data a pair's data
+        it = iter(toks)
+        pairs = zip(it, it)
+        toks = None
+        for body, data in pairs:
+            act = get(body)
+            if act is None:
+                act = _decode(body)
+                if act is None:
+                    return _scan_blocks_ref(html)
+                if len(memo) < 4096:  # bound the memo on adversarial input
+                    memo[body] = act
+            if type(act) is tuple:
+                tag, drop, boiler, block, entry, self_close, raw = act
+                stack.append(entry)
+                if drop:
+                    drop_depth += 1
                 else:
-                    # junk / quoted end tag: full grammar decides (a
-                    # quoted '>' extends it; unterminated → not a tag)
-                    m = _CAREFUL_TAG.match(html, lt)
-                    if m is None:
-                        scan = lt + 1
-                        continue
-                    nm2 = m.group(2)
-                    meta2 = tm.get(nm2)
-                    if meta2 is None:
-                        tag = nm2.lower()
-                        drop, boiler, block = tag_info(tag, _NO_INFO)
-                        meta2 = (tag, drop, boiler, block, (tag, boiler, drop, block))
-                        if len(tm) < 4096:
-                            tm[nm2] = meta2
-                    if lt > pos and not drop_depth:
-                        data = html[pos:lt]
-                        if "&" in data:
-                            data = unescape(data)
-                        if data:
-                            if cur is None:
-                                cur = _Block("p", boiler_depth > 0)
-                                blocks.append(cur)
-                            cur.parts.append(data)
-                            if link_depth:
-                                cur.link_chars += len(data.strip())
-                    pos = scan = m.end()
-                    _end(meta2[0])
-                    continue
-            if lt > pos and not drop_depth:
-                data = html[pos:lt]
-                if "&" in data:
-                    data = unescape(data)
-                if data:
-                    if cur is None:
-                        cur = _Block("p", boiler_depth > 0)
-                        blocks.append(cur)
-                    cur.parts.append(data)
-                    if link_depth:
-                        cur.link_chars += len(data.strip())
-            pos = scan = gt + 1
-            tag = meta[0]
-            if stack and stack[-1][0] == tag:
-                t, b, d, blk = stack.pop()
-                if d:
-                    if drop_depth:
-                        drop_depth -= 1
+                    if boiler:
+                        boiler_depth += 1
+                    if tag == "a":
+                        link_depth += 1
+                    if block:
+                        if tag == "br":
+                            cur = None
+                        else:
+                            cur = _Block(tag, boiler_depth > 0)
+                            blocks.append(cur)
+                    elif cur is not None:
+                        cur.n_elems += 1
+                if self_close:
+                    _end(tag)
+                elif raw:
+                    # raw text: skip to the close tag verbatim; ``tail``
+                    # counts the consumed characters after the open tag
+                    tail = None
+                    if "<" in data:
+                        tail = len(data)
+                    else:
+                        nxt = next(pairs, None)
+                        if nxt is None:
+                            return blocks  # unterminated raw-text: drop the tail
+                        if raw[0](nxt[0]):
+                            _end(tag)
+                            data = nxt[1]
+                        else:
+                            tail = len(data) + len(nxt[0]) + 2 + len(nxt[1])
+                    if tail is not None:
+                        # the open tag ends where the unconsumed pairs and
+                        # the consumed tail leave off
+                        pos = n - tail - sum(len(b) + len(d) + 2 for b, d in pairs)
+                        close = raw[1](html, pos)
+                        if close is None:
+                            return blocks
+                        gt = html.find(">", close.start())
+                        _end(tag)
+                        if gt < 0:
+                            return blocks
+                        toks = _SPLIT(html[gt + 1 :])
+                        break
+            elif act:
+                # well-nested fast path: the end tag matches the stack top —
+                # handle inline (one pop) instead of the unwind-call; ~97%
+                # of end tags in real HTML take this branch
+                if stack and stack[-1][0] == act:
+                    t, b, d, blk = stack.pop()
+                    if d:
+                        if drop_depth:
+                            drop_depth -= 1
+                    else:
+                        if b and boiler_depth:
+                            boiler_depth -= 1
+                        if t == "a" and link_depth:
+                            link_depth -= 1
+                        if blk:
+                            cur = None
                 else:
-                    if b and boiler_depth:
-                        boiler_depth -= 1
-                    if t == "a" and link_depth:
-                        link_depth -= 1
-                    if blk:
-                        cur = None
-            else:
-                _end(tag)
-            continue
-        if ("a" <= nc <= "z") or ("A" <= nc <= "Z"):
-            # ---- open tag -----------------------------------------------
-            gt = find(">", lt + 1)
-            if gt < 0:
-                scan = lt + 1
-                continue
-            sl = html[lt + 1 : gt]
-            om = _OPEN_MEMO.get(sl)
-            if om is None:
-                tag_end = gt + 1
-                memoizable = True
-                if '"' in sl or "'" in sl:
-                    # balanced same-kind quotes cannot hide a '>' (sl has
-                    # none) nor dangle open, so the slice IS the tag
-                    if "'" not in sl and sl.count('"') % 2 == 0:
-                        pass
-                    elif '"' not in sl and sl.count("'") % 2 == 0:
-                        pass
-                    else:
-                        # mixed/odd quotes: full grammar decides (a quoted
-                        # '>' extends the tag; unterminated quote voids it)
-                        m = _CAREFUL_TAG.match(html, lt)
-                        if m is None:
-                            scan = lt + 1
-                            continue
-                        memoizable = False
-                        name, blob, sc = m.group(2, 3, 4)
-                        self_close = bool(sc)
-                        tag_end = m.end()
-                if memoizable:
-                    m2 = _NAME_PREFIX.match(sl)  # sl[0] is alpha: matches
-                    name = m2.group()
-                    rest = sl[m2.end() :]
-                    if rest.endswith("/"):
-                        self_close = True
-                        blob = rest[:-1]
-                    else:
-                        self_close = False
-                        blob = rest
-                meta = tm.get(name)
-                if meta is None:
-                    tag = name.lower()
-                    drop, boiler, block = tag_info(tag, _NO_INFO)
-                    meta = (tag, drop, boiler, block, (tag, boiler, drop, block))
-                    if len(tm) < 4096:
-                        tm[name] = meta
-                tag, drop, boiler, block, entry = meta
-                if (
-                    blob
-                    and not boiler
-                    and (
-                        "class" in blob
-                        or "id" in blob
-                        or "ID" in blob
-                        or "CLASS" in blob
-                    )
-                ):
-                    attr_text = " ".join(
-                        (am.group(2) or am.group(3) or am.group(4) or "")
-                        for am in _FAST_ATTR.finditer(blob)
-                    )
-                    if attr_text and _BOILERPLATE_HINT.search(attr_text):
-                        boiler = True
-                        entry = (tag, True, drop, block)
-                if memoizable and len(_OPEN_MEMO) < 4096:
-                    _OPEN_MEMO[sl] = (tag, drop, boiler, block, entry, self_close)
-            else:
-                tag, drop, boiler, block, entry, self_close = om
-                tag_end = gt + 1
-            if lt > pos and not drop_depth:
-                data = html[pos:lt]
+                    _end(act)
+            if data and not drop_depth:
                 if "&" in data:
                     data = unescape(data)
                 if data:
@@ -470,66 +431,6 @@ def _scan_blocks(html: str) -> list[_Block]:
                     cur.parts.append(data)
                     if link_depth:
                         cur.link_chars += len(data.strip())
-            pos = scan = tag_end
-            stack.append(entry)
-            if drop:
-                drop_depth += 1
-            else:
-                if boiler:
-                    boiler_depth += 1
-                if tag == "a":
-                    link_depth += 1
-                if block:
-                    if tag == "br":
-                        cur = None
-                    else:
-                        cur = _Block(tag, boiler_depth > 0)
-                        blocks.append(cur)
-                elif cur is not None:
-                    cur.n_elems += 1
-            if self_close:
-                _end(tag)
-            elif tag in _RAWTEXT:
-                if lowered is None:
-                    lowered = html.lower()
-                close = lowered.find(f"</{tag}", pos)
-                if close < 0:
-                    return blocks  # unterminated raw-text: drop the tail
-                gt2 = find(">", close)
-                _end(tag)
-                pos = scan = n if gt2 < 0 else gt2 + 1
-            continue
-        if nc == "!" or nc == "?":
-            # ---- comment / doctype / PI ---------------------------------
-            m = _MISC_TAG.match(html, lt)
-            if m is None:
-                scan = lt + 1
-                continue
-            if lt > pos and not drop_depth:
-                data = html[pos:lt]
-                if "&" in data:
-                    data = unescape(data)
-                if data:
-                    if cur is None:
-                        cur = _Block("p", boiler_depth > 0)
-                        blocks.append(cur)
-                    cur.parts.append(data)
-                    if link_depth:
-                        cur.link_chars += len(data.strip())
-            pos = scan = m.end()
-            continue
-        scan = lt + 1  # '<' followed by junk: stays in the data run
-    if pos < n and not drop_depth:
-        data = html[pos:]
-        if "&" in data:
-            data = unescape(data)
-        if data:
-            if cur is None:
-                cur = _Block("p", boiler_depth > 0)
-                blocks.append(cur)
-            cur.parts.append(data)
-            if link_depth:
-                cur.link_chars += len(data.strip())
     return blocks
 
 

@@ -56,11 +56,73 @@ def spread_scan(df: DataFrame) -> DataFrame:
     and adds no exchange; only a degenerate under-split scan pays one
     narrow shuffle to unlock the cores.  Round-robin ``repartition(n)``
     keeps AQE from re-coalescing (user-specified partition counts are
-    preserved; only ENSURE_REQUIREMENTS shuffles coalesce)."""
+    preserved; only ENSURE_REQUIREMENTS shuffles coalesce).
+
+    Partitions are counted by :func:`_partitions_with_rows`: a byte
+    split past a file's last row group scans nothing."""
     target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
+    if _partitions_with_rows(df, target) >= target:
         return df
     return df.repartition(target)
+
+
+def _partitions_with_rows(df: DataFrame, target: int) -> int:
+    """Partitions of ``df`` that hold rows, counted up to ``target``.
+
+    When ``df`` is a chain of single-child, exchange-free operators over
+    one parquet scan, a partition counts only if one of its byte splits
+    holds a row group's midpoint: the parquet reader gives each row
+    group to the split holding its midpoint (first page offset plus half
+    its compressed size), so a 16 MB single-row-group file splits four
+    ways on four cores and three splits scan nothing.  The footers are
+    read on the driver; no Spark job runs.  Any other plan, or a footer
+    that cannot be read, counts every partition."""
+    n = df.rdd.getNumPartitions()
+    plan = df._jdf.queryExecution().executedPlan()
+    while plan.getClass().getSimpleName() != "FileSourceScanExec":
+        children = plan.children()
+        if children.size() != 1 or "Exchange" in plan.getClass().getSimpleName():
+            return n
+        plan = children.apply(0)
+    parts = plan.inputRDD().partitions()
+    if plan.relation().fileFormat().shortName() != "parquet" or len(parts) != n:
+        return n
+    mids: dict[str, list[int]] = {}
+    held = 0
+    try:
+        for part in parts:
+            for f in part.files():
+                uri = f.filePath().toString()
+                if uri not in mids:
+                    mids[uri] = _row_group_midpoints(uri)
+                lo = f.start()
+                if any(lo <= m < lo + f.length() for m in mids[uri]):
+                    held += 1
+                    break
+            if held >= target:
+                break
+    except (OSError, ValueError):
+        return n
+    return held
+
+
+def _row_group_midpoints(uri: str) -> list[int]:
+    import pyarrow.fs as pafs  # driver only: keeps worker imports light
+    import pyarrow.parquet as pq
+
+    fs, path = pafs.FileSystem.from_uri(uri)
+    with fs.open_input_file(path) as fh:
+        md = pq.read_metadata(fh)
+    mids = []
+    for i in range(md.num_row_groups):
+        rg = md.row_group(i)
+        first = rg.column(0)
+        start = first.data_page_offset
+        if first.has_dictionary_page and first.dictionary_page_offset < start:
+            start = first.dictionary_page_offset
+        size = sum(rg.column(j).total_compressed_size for j in range(rg.num_columns))
+        mids.append(start + size // 2)
+    return mids
 
 
 def register_testdata(spark: SparkSession, sf_dir: str) -> None:

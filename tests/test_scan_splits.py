@@ -19,6 +19,7 @@ from accelerated_intelligent_document_processing_on_aws_spark.operators.extract 
     lineage,
 )
 from accelerated_intelligent_document_processing_on_aws_spark.sources.tables import (
+    _partitions_with_rows,
     spread_scan,
 )
 
@@ -56,6 +57,29 @@ def many_row_groups(tmp_path_factory):
     p = tmp_path_factory.mktemp("scan") / "many_rg.parquet"
     pq.write_table(table, str(p), compression="none", row_group_size=n_rows // 24)
     return str(p), n_rows
+
+
+def _random_text_table(n_rows: int, width: int, seed: int) -> pa.Table:
+    rng = np.random.default_rng(seed)
+    letters = np.frombuffer(b"abcdefghijklmnopqrstuvwxyz     ", dtype=np.uint8)
+    text = letters[rng.integers(0, len(letters), size=(n_rows, width))]
+    return pa.table(
+        {
+            "id": pa.array(range(n_rows), pa.int64()),
+            "text": [row.tobytes().decode() for row in text],
+        }
+    )
+
+
+@pytest.fixture(scope="module")
+def big_row_group(tmp_path_factory):
+    """~16.8 MB of incompressible text in ONE row group: Spark's defaults
+    split it one way per core, and only the split holding the row
+    group's midpoint scans rows."""
+    p = tmp_path_factory.mktemp("scan") / "big_rg.parquet"
+    pq.write_table(_random_text_table(4096, 4096, 11), str(p), compression="none")
+    assert pq.ParquetFile(str(p)).metadata.num_row_groups == 1
+    return str(p), 4096
 
 
 def test_single_row_group_spreads_to_default_parallelism(spark, one_row_group):
@@ -99,3 +123,30 @@ def test_unsalted_kernel_runs_at_most_one_task_per_core(spark, many_row_groups):
     assert sum(r["rows_in"] for r in rows) == n
     tasks = {r["partition_id"] for r in rows}
     assert len(tasks) <= spark.sparkContext.defaultParallelism
+
+
+def test_empty_splits_do_not_count(spark, big_row_group):
+    path, n = big_row_group
+    sc = spark.sparkContext
+    target = sc.defaultParallelism
+    df = spark.read.parquet(path).where("id >= 0").select("text")
+    assert df.rdd.getNumPartitions() >= target
+    assert sum(1 for k in df.rdd.glom().map(len).collect() if k) == 1
+    group = "spread-scan-empty-splits"
+    sc.setJobGroup(group, "spread_scan over empty splits")
+    try:
+        spread = spread_scan(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    sizes = spread.rdd.glom().map(len).collect()
+    assert len(sizes) == target and all(sizes) and sum(sizes) == n
+
+
+@pytest.mark.parametrize("name", ["one_row_group", "many_row_groups", "big_row_group"])
+def test_partitions_with_rows_matches_the_reader(spark, name, request):
+    """The midpoint rule counts exactly the scan partitions the parquet
+    reader fills (the 24-row-group file leaves its last split empty)."""
+    df = spark.read.parquet(request.getfixturevalue(name)[0])
+    sizes = df.rdd.glom().map(len).collect()
+    assert _partitions_with_rows(df, len(sizes)) == sum(1 for k in sizes if k)
