@@ -18,6 +18,7 @@ wall-clock — so Spark partitioning cannot perturb the output.
 from __future__ import annotations
 
 import re
+from operator import length_hint
 
 # Subtrees dropped entirely (never contribute text).
 _DROP_TAGS = frozenset(
@@ -260,12 +261,14 @@ def _scan_blocks_ref(html: str) -> list[_Block]:
 # scanner checks its quotes (``_decode``).
 _SPLIT = re.compile(r"<(/?[a-zA-Z][^>]*|!--.*?--|![^>]*|\?[^>]*)>", re.DOTALL).split
 _NAME_PREFIX = re.compile(r"[a-zA-Z][a-zA-Z0-9:-]*")
-# tag body → its decoded action: "" for a comment/doctype/PI, the tag for
-# an end tag, else the COMPLETE open decision (tag, drop, boiler-with-
-# attr-hint, block, stack entry, self_close, raw-text patterns or None).
+# tag body → its decoded action: the tag for an end tag, else the
+# COMPLETE open decision (tag, drop, boiler-with-attr-hint, block, stack
+# entry, self_close, raw-text patterns or None).
 # Real corpora repeat a small set of templated tags (class attrs
 # included), so a token costs one dict probe; the attr regex and the
-# boilerplate-hint search run once per distinct tag string.
+# boilerplate-hint search run once per distinct tag string.  Comments,
+# doctypes and PIs (action "") are not stored: they are often unique
+# and ``_decode`` settles them with a one-character check.
 _OPEN_MEMO: dict = {}
 
 
@@ -309,8 +312,10 @@ def _scan_blocks(html: str) -> list[_Block]:
     One ``re.split`` yields the document's (tag body, data) stream and
     one ``_OPEN_MEMO`` probe decodes each token.  A raw-text element
     whose text holds no '<' closes at the next token; otherwise its
-    close tag is found as the reference finds it and the tail after it
-    is split again.  A tag whose quotes only the reference grammar can
+    close tag is found as the reference finds it and the scan resumes
+    at the token that ends there (only a comment straddling the close
+    tag makes it split the tail again), so a page costs one pass over
+    its tokens however many scripts it holds.  A tag whose quotes only the reference grammar can
     resolve sends the whole document to :func:`_scan_blocks_ref`.
     Equivalence is CI-gated over the fixture corpus, adversarial cases
     and random tag soup (tests/test_tokenizer_equiv.py,
@@ -319,7 +324,6 @@ def _scan_blocks(html: str) -> list[_Block]:
     drop_depth = boiler_depth = link_depth = 0
     cur: _Block | None = None
     stack: list[tuple] = []
-    n = len(html)
     unescape = _html_mod.unescape
     memo = _OPEN_MEMO
     get = memo.get
@@ -341,19 +345,20 @@ def _scan_blocks(html: str) -> list[_Block]:
             if t == tag:
                 break
 
-    toks = _SPLIT(html)
+    toks, ck_off = _SPLIT(html), 0
     while toks:
-        toks.insert(0, "!")  # a doctype body makes the leading data a pair's data
-        it = iter(toks)
+        seg, toks = toks, None
+        seg.insert(0, "!")  # a doctype body makes the leading data a pair's data
+        it = iter(seg)
         pairs = zip(it, it)
-        toks = None
+        ck = 1  # seg[ck] is a data run that starts at html[ck_off]
         for body, data in pairs:
             act = get(body)
             if act is None:
                 act = _decode(body)
                 if act is None:
                     return _scan_blocks_ref(html)
-                if len(memo) < 4096:  # bound the memo on adversarial input
+                if act and len(memo) < 4096:  # bound the memo on adversarial input
                     memo[body] = act
             if type(act) is tuple:
                 tag, drop, boiler, block, entry, self_close, raw = act
@@ -376,33 +381,32 @@ def _scan_blocks(html: str) -> list[_Block]:
                 if self_close:
                     _end(tag)
                 elif raw:
-                    # raw text: skip to the close tag verbatim; ``tail``
-                    # counts the consumed characters after the open tag
-                    tail = None
-                    if "<" in data:
-                        tail = len(data)
+                    # raw text: skip to the close tag verbatim
+                    i = len(seg) - length_hint(it)  # seg index of the next body
+                    if "<" not in data and i < len(seg) and raw[0](seg[i]):
+                        _end(tag)
+                        data = next(pairs)[1]
                     else:
-                        nxt = next(pairs, None)
-                        if nxt is None:
-                            return blocks  # unterminated raw-text: drop the tail
-                        if raw[0](nxt[0]):
-                            _end(tag)
-                            data = nxt[1]
-                        else:
-                            tail = len(data) + len(nxt[0]) + 2 + len(nxt[1])
-                    if tail is not None:
-                        # the open tag ends where the unconsumed pairs and
-                        # the consumed tail leave off
-                        pos = n - tail - sum(len(b) + len(d) + 2 for b, d in pairs)
+                        pos = ck_off + sum(map(len, seg[ck : i - 1])) + i - 1 - ck
                         close = raw[1](html, pos)
                         if close is None:
-                            return blocks
-                        gt = html.find(">", close.start())
+                            return blocks  # unterminated raw-text: drop the tail
+                        gt = html.find(">", close.start()) + 1
                         _end(tag)
-                        if gt < 0:
+                        if not gt:
                             return blocks
-                        toks = _SPLIT(html[gt + 1 :])
-                        break
+                        # resume at the token that ends where the close tag
+                        # does; split the tail again if a comment straddles it
+                        q = pos + len(data)
+                        for body, data in pairs:
+                            q += len(body) + 2
+                            if q >= gt:
+                                break
+                            q += len(data)
+                        if q != gt:
+                            toks, ck_off = _SPLIT(html[gt:]), gt
+                            break
+                        ck, ck_off = len(seg) - length_hint(it) - 1, gt
             elif act:
                 # well-nested fast path: the end tag matches the stack top —
                 # handle inline (one pop) instead of the unwind-call; ~97%

@@ -71,12 +71,15 @@ def _partitions_with_rows(df: DataFrame, target: int) -> int:
 
     When ``df`` is a chain of single-child, exchange-free operators over
     one parquet scan, a partition counts only if one of its byte splits
-    holds a row group's midpoint: the parquet reader gives each row
-    group to the split holding its midpoint (first page offset plus half
-    its compressed size), so a 16 MB single-row-group file splits four
-    ways on four cores and three splits scan nothing.  The footers are
-    read on the driver; no Spark job runs.  Any other plan, or a footer
-    that cannot be read, counts every partition."""
+    can hold rows.  A split that covers its whole file counts without
+    further ado.  Only a file cut into several byte ranges can leave a
+    split empty: the parquet reader gives each row group to the split
+    holding its midpoint (first page offset plus half its compressed
+    size), so a 16 MB single-row-group file splits four ways on four
+    cores and three splits scan nothing.  For such files the footer is
+    read on the driver, once per file and only until ``target``
+    partitions are found; no Spark job runs.  Any other plan, or a
+    footer that cannot be read, counts every partition."""
     n = df.rdd.getNumPartitions()
     plan = df._jdf.queryExecution().executedPlan()
     while plan.getClass().getSimpleName() != "FileSourceScanExec":
@@ -92,6 +95,9 @@ def _partitions_with_rows(df: DataFrame, target: int) -> int:
     try:
         for part in parts:
             for f in part.files():
+                if f.start() == 0 and f.length() == f.fileSize():
+                    held += 1
+                    break
                 uri = f.filePath().toString()
                 if uri not in mids:
                     mids[uri] = _row_group_midpoints(uri)

@@ -18,6 +18,7 @@ from accelerated_intelligent_document_processing_on_aws_spark.operators.extract 
     extract_turns,
     lineage,
 )
+from accelerated_intelligent_document_processing_on_aws_spark.sources import tables
 from accelerated_intelligent_document_processing_on_aws_spark.sources.tables import (
     _partitions_with_rows,
     spread_scan,
@@ -150,3 +151,19 @@ def test_partitions_with_rows_matches_the_reader(spark, name, request):
     df = spark.read.parquet(request.getfixturevalue(name)[0])
     sizes = df.rdd.glom().map(len).collect()
     assert _partitions_with_rows(df, len(sizes)) == sum(1 for k in sizes if k)
+
+
+def test_whole_file_splits_count_without_a_footer_read(spark, tmp_path, monkeypatch):
+    """A split that covers its whole file counts as holding rows; only a
+    file cut into several byte ranges has its footer read."""
+    for i in range(6):
+        write_transcripts_parquet(str(tmp_path / f"part-{i}.parquet"), n_convs=3, seed=i)
+    df = spark.read.parquet(str(tmp_path))
+    n = df.rdd.getNumPartitions()
+    assert n > 1
+
+    def refuse(uri):
+        raise AssertionError(f"footer read for {uri}")
+
+    monkeypatch.setattr(tables, "_row_group_midpoints", refuse)
+    assert _partitions_with_rows(df, n) == n

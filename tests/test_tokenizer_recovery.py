@@ -1,9 +1,10 @@
 """Mid-document recovery of the split tokenizer.
 
 ``_scan_blocks`` walks one ``re.split`` token stream.  Raw text holding
-'<' makes it find the close tag by offset and split the tail again, and
-a tag whose quotes only the reference grammar resolves sends the whole
-document to ``_scan_blocks_ref``.  Each case here must equal the
+'<' makes it find the close tag by offset and resume at the token that
+ends there (a comment straddling the close tag makes it split the tail
+again), and a tag whose quotes only the reference grammar resolves
+sends the whole document to ``_scan_blocks_ref``.  Each case here must equal the
 reference; the fixture-splice strategy puts the same fragments after
 realistic markup, where a wrong offset would shift every later block."""
 
@@ -56,6 +57,17 @@ RECOVERY = {
     "comment_with_tags": _PARA.format(1)
     + "<!-- <div><p>commented out</p></div> -->"
     + _PARA.format(2),
+    "twenty_scripts_with_lt": "".join(
+        _PARA.format(i) + f"<script>if (a<b{i}) {{ s = '<p>'; }}</script>"
+        for i in range(20)
+    )
+    + _PARA.format(20),
+    "tag_token_swallows_script_close": _PARA.format(1)
+    + "<script>if (a<b){}</script>"
+    + _PARA.format(2),
+    "comment_straddles_script_close": _PARA.format(1)
+    + "<script>x = a < b; <!-- </script> --> y</script>"
+    + _PARA.format(2),
 }
 
 
@@ -65,7 +77,14 @@ def test_recovery_case_equals_reference(name):
 
 
 @pytest.mark.parametrize(
-    "name", ["script_with_lt_after_50_tags", "two_scripts", "upper_close_with_space"]
+    "name",
+    [
+        "script_with_lt_after_50_tags",
+        "two_scripts",
+        "upper_close_with_space",
+        "twenty_scripts_with_lt",
+        "comment_straddles_script_close",
+    ],
 )
 def test_raw_text_with_lt_takes_no_whole_document_fallback(name, monkeypatch):
     def refuse(html):
