@@ -315,8 +315,9 @@ def _scan_blocks(html: str) -> list[_Block]:
     close tag is found as the reference finds it and the scan resumes
     at the token that ends there (only a comment straddling the close
     tag makes it split the tail again), so a page costs one pass over
-    its tokens however many scripts it holds.  A tag whose quotes only the reference grammar can
-    resolve sends the whole document to :func:`_scan_blocks_ref`.
+    its tokens however many scripts it holds.  A tag whose quotes only
+    the reference grammar can resolve sends the whole document to
+    :func:`_scan_blocks_ref`.
     Equivalence is CI-gated over the fixture corpus, adversarial cases
     and random tag soup (tests/test_tokenizer_equiv.py,
     tests/test_tokenizer_recovery.py)."""
@@ -387,6 +388,8 @@ def _scan_blocks(html: str) -> list[_Block]:
                         _end(tag)
                         data = next(pairs)[1]
                     else:
+                        # offset of this data run: every body since seg[ck]
+                        # also spans its '<' and '>'
                         pos = ck_off + sum(map(len, seg[ck : i - 1])) + i - 1 - ck
                         close = raw[1](html, pos)
                         if close is None:
