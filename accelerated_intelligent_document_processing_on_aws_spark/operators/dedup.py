@@ -30,8 +30,10 @@ of CANDIDATE ids only (semi-join pushes the id filter to the scan).
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -763,13 +765,59 @@ def simhash_pairs(
 # duplicate clusters: connected components over near-dup pairs
 # ---------------------------------------------------------------------------
 
+# Pairs one clustering task may hold; the measured peak memory behind
+# it is in duplicate_clusters' docstring.
+MAX_CLUSTER_PAIRS = 10_000_000
+
+
+def _min_label_components(a: pa.Array, b: pa.Array) -> tuple[pa.Array, pa.Array]:
+    """Connected components of the graph whose edges are ``(a[i], b[i])``
+    → ``(ids, cluster_ids)``: every distinct endpoint once, in ascending
+    order, with the minimum id of its component.
+
+    Nodes are ranked so that rank order is the order of the id type
+    (``sort_indices`` over the dictionary; bytewise for strings, as in
+    Spark).  Each round hooks every root to the smallest root across its
+    edges (``np.minimum.at``) and then pointer-jumps to a fixpoint, so
+    every node points at its root again.  Labels only decrease and a
+    round with an unsettled edge hooks at least one root, so the loop
+    ends; an edge whose endpoints share a root stays settled and is
+    dropped.  A null endpoint is a node of its own, ``(null, null)``,
+    and joins no edge."""
+    nodes = pa.concat_arrays([a, b]).dictionary_encode()
+    values = nodes.dictionary
+    order = pc.sort_indices(values).to_numpy()
+    rank = np.empty(len(order), dtype=np.int32)
+    rank[order] = np.arange(len(order), dtype=np.int32)
+    idx = nodes.indices.fill_null(0).to_numpy()
+    n = len(a)
+    valid = pc.and_(a.is_valid(), b.is_valid()).to_numpy(zero_copy_only=False)
+    u, v = rank[idx[:n][valid]], rank[idx[n:][valid]]
+    label = np.arange(len(order), dtype=np.int32)
+    while True:
+        lu, lv = label[u], label[v]
+        open_ = lu != lv
+        if not open_.any():
+            break
+        u, v, lu, lv = u[open_], v[open_], lu[open_], lv[open_]
+        m = np.minimum(lu, lv)
+        np.minimum.at(label, lu, m)
+        np.minimum.at(label, lv, m)
+        while True:
+            jumped = label[label]
+            if np.array_equal(jumped, label):
+                break
+            label = jumped
+    ids = values.take(order)
+    cluster = ids.take(label)
+    if nodes.null_count:
+        ids = pa.concat_arrays([ids, pa.nulls(1, ids.type)])
+        cluster = pa.concat_arrays([cluster, pa.nulls(1, ids.type)])
+    return ids, cluster
+
+
 def duplicate_clusters(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 20,
-    check_every: int = 1,
-    strict: bool = True,
+    pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b"
 ) -> DataFrame:
     """Connected components over near-duplicate PAIRS → duplicate
     CLUSTERS ``(id, cluster_id)`` with ``cluster_id`` = the minimum
@@ -777,107 +825,53 @@ def duplicate_clusters(
 
     A dedup pipeline needs clusters, not pairs: transitive chains
     (A≈B, B≈C) must collapse to one keeper even when A and C never
-    collided.  Iterative min-label propagation WITH pointer jumping:
-    each round every node adopts the smallest label among itself and
-    its neighbors, then additionally adopts its label's own label
-    (path halving) — chain depth halves every round, so convergence is
-    O(log diameter) rounds instead of O(diameter).  The round-6
-    2.6M-turn drill surfaced why this matters: the fixture corpus
-    contains a near-dup chain >20 hops deep, and plain propagation
-    blew the 20-round budget that pointer jumping clears in 6.
-    Labels only decrease and are always some member's id, so the
-    shortcut preserves the fixpoint (= component min id).
-    ``localCheckpoint`` every round truncates the lineage so the plan
-    does not grow with iterations — the standard Spark iterative-graph
-    pattern.
+    collided.  The pairs go to one task
+    (``repartition(1).mapInArrow``), where
+    :func:`_min_label_components` labels the whole graph with numpy
+    array operations; the result is exact for any component shape, and
+    building the frame runs no job.  Both id columns take their common
+    type, which ``id`` and ``cluster_id`` keep.  Every distinct endpoint
+    appears once; a null endpoint joins no edge and comes out as
+    ``(null, null)``.
 
-    ``check_every``: run the driver-side convergence ``count()`` only
-    every k rounds (at very large cluster counts the per-round count job
-    is the overhead; the propagation joins themselves are idempotent, so
-    extra rounds past convergence are cheap no-ops).
-
-    ``strict``: if the final checked round still had label changes —
-    a component's diameter exceeded ``max_iter`` — raise rather than
-    return partially-merged labels (a downstream
-    :func:`dedup_keep_canonical` would otherwise silently keep several
-    "canonical" docs of one true cluster).  ``strict=False`` degrades
-    to a ``warnings.warn``.
+    Bound: that one task holds every endpoint.  Its peak RSS over the
+    interpreter's, measured running ``_min_label_components`` on random
+    pairs over 2N ids (pyarrow 16, numpy 1.26, x86-64), is 120-135
+    bytes per pair for int64 ids at 3·10^6-10^7 pairs and 150-190 for
+    ``"conv#turn"`` strings at 3·10^6-6·10^6; below ~2·10^6 pairs a
+    fixed 150-250 MB of hash-table growth dominates (NOTES.md,
+    "duplicate_clusters as one Arrow stage").  ``MAX_CLUSTER_PAIRS``
+    keeps the task under ~2 GB: more pairs raise ``ValueError`` in the
+    task before the kernel allocates.
     """
-    if check_every < 1:
-        raise ValueError("check_every must be >= 1")
-    edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    und = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    id_type = pairs.select(F.coalesce(F.col(id_a), F.col(id_b))).schema[0].dataType
+    edges = pairs.select(
+        F.col(id_a).cast(id_type).alias("a"), F.col(id_b).cast(id_type).alias("b")
     )
-    # eager checkpoints: both run a job now, and like every checkpoint
-    # below their blocks stay in executor storage until the session ends
-    und = und.localCheckpoint()
-    labels = (
-        und.select(F.col("src").alias("id")).distinct().withColumn("label", F.col("id"))
-    ).localCheckpoint()
-    converged = False
-    for it in range(max_iter):
-        neighbor_min = (
-            und.join(labels, und.src == labels.id)
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        stepped = labels.join(neighbor_min, "id", "left").select(
-            "id",
-            F.least(F.col("label"), F.coalesce("nbr_label", F.col("label"))).alias(
-                "label"
-            ),
-        )
-        # pointer jumping: adopt the label of your label — every label
-        # is some node's id, so the self-join resolves one more hop;
-        # chain depth halves per round (left join + coalesce is a
-        # guard only; the referenced id always exists in the table)
-        hop = stepped.select(
-            F.col("id").alias("_lid"), F.col("label").alias("_llabel")
-        )
-        # eager=False (round 8): the eager form ran one more job per
-        # round to materialize the final stage; eager=False folds that
-        # stage into the next action touching the frame (the count
-        # below, or the following round's joins) while still truncating
-        # lineage.  It is not lazy: the call runs the round's join and
-        # aggregate exchanges, and every round's blocks stay in executor
-        # storage until the session ends.  On a ~500k-turn chain corpus
-        # the component stage measured 4.6 s → ~2.8 s.
-        new_labels = (
-            stepped.join(hop, stepped.label == hop._lid, "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("label"), F.coalesce("_llabel", F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        do_check = ((it + 1) % check_every == 0) or (it == max_iter - 1)
-        if do_check:
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "id")
-                .where(F.col("n.label") != F.col("o.label"))
-                .count()
-            )
-            if changed == 0:
-                labels = new_labels
-                converged = True
-                break
-        labels = new_labels
-    if not converged:
-        msg = (
-            f"duplicate_clusters did not converge within max_iter={max_iter} "
-            "rounds — a component's diameter exceeds the budget; labels are "
-            "PARTIAL (raise max_iter)"
-        )
-        if strict:
-            raise RuntimeError(msg)
-        import warnings
+    schema = T.StructType(
+        [T.StructField("id", id_type), T.StructField("cluster_id", id_type)]
+    )
 
-        warnings.warn(msg, stacklevel=2)
-    return labels.select("id", F.col("label").alias("cluster_id"))
+    def _components(batches):
+        kept, n = [], 0
+        for batch in batches:
+            n += batch.num_rows
+            if n > MAX_CLUSTER_PAIRS:
+                raise ValueError(
+                    f"duplicate_clusters: more than MAX_CLUSTER_PAIRS="
+                    f"{MAX_CLUSTER_PAIRS} pairs; one task holds them all"
+                )
+            kept.append(batch)
+        if not n:
+            return
+        t = pa.Table.from_batches(kept)
+        ids, cluster = _min_label_components(
+            t["a"].combine_chunks(), t["b"].combine_chunks()
+        )
+        # bounded batches keep each Arrow message to the JVM small
+        yield from pa.table({"id": ids, "cluster_id": cluster}).to_batches(65536)
+
+    return edges.repartition(1).mapInArrow(_components, schema=schema)
 
 
 def dedup_keep_canonical(
@@ -908,43 +902,39 @@ def dedup_keep_representative(
     ``score_col``: name of an existing per-doc score column; when None,
     the composite ``quality_score`` from
     :func:`..operators.textstats.quality_features` is computed for
-    CLUSTERED docs only (a broadcast-semi-join narrows the corpus first
-    — quality runs on the tiny clustered slice, not the whole corpus).
-    Winner per cluster = max score, ties broken by MIN id (so the
-    result is deterministic and degenerates to
+    CLUSTERED docs only.  One broadcast join of the corpus to the
+    clusters narrows it to the clustered slice and carries
+    ``cluster_id`` into scoring and ranking, so the clusters are
+    computed once per action.  Winner per cluster = max score, ties
+    broken by MIN id (so the result is deterministic and degenerates to
     :func:`dedup_keep_canonical` under constant scores).  Docs in no
     pair pass through untouched.
 
     Scale shape: clusters table is near-dup-sized (tiny vs corpus);
-    the winner choice is one groupBy(max(struct(score, -id))) over it;
-    losers broadcast into a left-anti join against the corpus — the
-    full corpus is never shuffled."""
-    clusters = duplicate_clusters(pairs)
+    the winner choice is one window over it; losers broadcast into a
+    left-anti join against the corpus — the full corpus is never
+    shuffled."""
+    clustered = docs.join(
+        F.broadcast(
+            duplicate_clusters(pairs).select(
+                F.col("id").alias(id_col), F.col("cluster_id").alias("_cid")
+            )
+        ),
+        id_col,
+    )
     if score_col is None:
         from .textstats import quality_features
 
-        scored = quality_features(
-            docs.join(
-                F.broadcast(clusters.select(F.col("id").alias(id_col))),
-                id_col,
-                "left_semi",
-            ),
-            text_col=text_col,
-        ).select(F.col(id_col).alias("id"), F.col("quality_score").alias("_s"))
-    else:
-        scored = docs.select(
-            F.col(id_col).alias("id"), F.col(score_col).alias("_s")
-        )
+        clustered = quality_features(clustered, text_col=text_col)
+        score_col = "quality_score"
     from pyspark.sql import Window
 
     # collapse duplicate doc_id rows (messy input) to one member row per
     # (cluster, id) BEFORE ranking — otherwise a duplicated winning id
     # would rank 1 and 2 and its _rk=2 copy would put the winner itself
     # into the loser set, deleting the cluster's best document
-    member = (
-        clusters.join(scored, "id")
-        .groupBy("cluster_id", "id")
-        .agg(F.max("_s").alias("_s"))
+    member = clustered.groupBy("_cid", F.col(id_col).alias("id")).agg(
+        F.max(score_col).alias("_s")
     )
     # max score, tie → min id — row_number keeps the rule type-agnostic
     # (ids may be strings/UUIDs; negating an id would silently NULL
@@ -954,9 +944,7 @@ def dedup_keep_representative(
         member.withColumn(
             "_rk",
             F.row_number().over(
-                Window.partitionBy("cluster_id").orderBy(
-                    F.desc("_s"), F.asc("id")
-                )
+                Window.partitionBy("_cid").orderBy(F.desc("_s"), F.asc("id"))
             ),
         )
         .where(F.col("_rk") > 1)

@@ -634,9 +634,9 @@ def semantic_dedup(
       2. within-cluster cosine pairs ≥ ``threshold`` (block-local
          self-join — bounded per cluster the same way the LSH bucket
          joins are);
-      3. connected components over the pair graph (pointer-jumping
-         :func:`..operators.dedup.duplicate_clusters` — O(log
-         diameter) rounds);
+      3. connected components over the pair graph
+         (:func:`..operators.dedup.duplicate_clusters`, one Arrow
+         task that holds every pair);
       4. keep the member FARTHEST from its cluster centroid (the
          paper's finding: keeping low-centroid-similarity examples
          preserves diversity best), tie-broken by min id; drop the

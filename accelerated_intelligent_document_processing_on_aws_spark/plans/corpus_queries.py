@@ -510,9 +510,10 @@ def dedup_keep_representative_docs(spark, sf_dir):
     per cluster (max composite ``quality_score``, tie → min doc_id) →
     broadcast anti-join of the losers against the corpus.  The oracle
     recomputes the same result with a recursive transitive closure and
-    a window rank — feasible because fixture components are small,
-    while the Spark path (iterative min-label propagation + clusters-
-    only quality scoring) is the one that scales.  The oracle mirrors
+    a window rank — feasible because fixture components are small.
+    The Spark path labels the components in one Arrow task and scores
+    only the clustered docs, reading the clusters once through one
+    broadcast join.  The oracle mirrors
     the Spark shingle kernel's short-doc fallback (whole-text singleton
     below n tokens, [''] for token-less docs — r6 ADVICE) and rounds
     Jaccard to 6dp before thresholding, pinned by

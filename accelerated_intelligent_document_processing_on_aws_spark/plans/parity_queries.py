@@ -1006,11 +1006,12 @@ def pack_token_windows_docs(spark, sf_dir):
     """,
 )
 def near_dup_clusters(spark, sf_dir):
-    """Duplicate clusters from near-dup pairs: Spark runs iterative
-    min-label propagation (O(diameter) shuffle rounds); the oracle
-    computes the same components by recursive transitive closure —
-    feasible exactly because fixture components are small, while the
-    Spark path is the one that scales."""
+    """Duplicate clusters from near-dup pairs: Spark labels the
+    components in one Arrow task (``duplicate_clusters``: min-label
+    hooking and pointer jumping over numpy arrays, exact for any
+    component shape); the oracle computes the same components by
+    recursive transitive closure — feasible exactly because fixture
+    components are small."""
     d = _t(spark, sf_dir, "documents").where(F.col("doc_id") % 4 == 0)
     from ..operators import dedup
 

@@ -16,6 +16,16 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def driver_memory() -> str:
+    """``SPARK_DRIVER_MEMORY`` if set, else half of physical memory and at
+    most 24g: a heap larger than the host can back lets the JVM run
+    the host out of memory mid-job."""
+    if "SPARK_DRIVER_MEMORY" in os.environ:
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(ram_mb // 2, 24 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "idp-spark",
     master: str | None = None,
@@ -45,7 +55,7 @@ def get_spark(
         # default and zstd ~2x slower (CPU-bound compressor on compressible
         # text; also unifies with the parquet codec)
         .config("spark.io.compression.codec", "snappy")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

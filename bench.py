@@ -84,9 +84,7 @@ def _curation_chain(spark) -> dict:
     (round-6 verdict item 6): LSH pairs → connected-component clusters
     → keep-representative → split-leakage gate on a fixed ~500k-turn
     Zipf corpus, each stage materialized so its wall time is its own.
-    Catches dedup-chain regressions per-round the way query timings do;
-    the full 2.6M-turn drill (scripts/dedup_drill.py) stays the deep
-    probe."""
+    Catches dedup-chain regressions per-round the way query timings do."""
     import shutil
 
     from accelerated_intelligent_document_processing_on_aws_spark.fixtures import (

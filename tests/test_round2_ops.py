@@ -287,34 +287,3 @@ class TestAdviceR2Fixes:
         got = {(r["id_a"], r["id_b"]) for r in rows}
         assert (1, 2) in got or (2, 1) in got
         assert all(r["hamming"] == 0 for r in rows)
-
-    def test_duplicate_clusters_unconverged_raises(self, spark):
-        import pytest
-
-        from accelerated_intelligent_document_processing_on_aws_spark.operators.dedup import (
-            duplicate_clusters,
-        )
-
-        # path graph 0-1-2-...-9: diameter 9, max_iter=2 cannot converge
-        pairs = spark.createDataFrame(
-            [(i, i + 1) for i in range(9)], "id_a int, id_b int"
-        )
-        with pytest.raises(RuntimeError, match="did not converge"):
-            duplicate_clusters(pairs, max_iter=2).collect()
-        with pytest.warns(UserWarning, match="did not converge"):
-            got = duplicate_clusters(pairs, max_iter=2, strict=False)
-            got.collect()
-
-    def test_duplicate_clusters_check_every(self, spark):
-        from accelerated_intelligent_document_processing_on_aws_spark.operators.dedup import (
-            duplicate_clusters,
-        )
-
-        pairs = spark.createDataFrame(
-            [(1, 2), (2, 3), (10, 11)], "id_a int, id_b int"
-        )
-        got = {
-            r["id"]: r["cluster_id"]
-            for r in duplicate_clusters(pairs, check_every=3).collect()
-        }
-        assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
