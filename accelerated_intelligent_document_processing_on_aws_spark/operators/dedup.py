@@ -8,19 +8,16 @@
 - n-gram Jaccard: set overlap of distinct token shingles per pair.
 - embedding near-dup: cosine over candidate pairs (blocked or brute).
 
-**Signature computation is fully vectorized** (round 5): the pandas
-UDFs below delegate every per-document step — tokenize, token/shingle
-hashing, distinct, K-minhash min, band fold, SimHash bit votes — to the
+**Signature computation is fully vectorized**: the pandas UDFs below
+delegate every per-document step — tokenize, token/shingle hashing,
+distinct, K-minhash min, band fold, SimHash bit votes — to the
 Arrow/numpy batch kernel in :mod:`..kernel.sighash` (zero per-document
 Python; equivalence-gated against a per-document reference of the same
-hash family by ``tests/test_sighash_equiv.py``).  History: round 1
-computed signatures as pure-Catalyst ``aggregate``/``zip_with`` lambdas
-with 32-64 ``xxhash64`` calls per element (higher-order-function
-lambdas are NOT whole-stage-codegen'd → ~16 ms/doc interpreted);
-rounds 2-4 used a per-document Python loop with one blake2b per
-distinct shingle (the numpy remix was vectorized, the hashing was not).
-The Catalyst expressions are kept below as the no-Python fallback and
-as documentation of the algebra; the UDFs are the default path.
+hash family by ``tests/test_sighash_equiv.py``).  They are the only
+signature path: the same algebra as Catalyst ``aggregate``/``zip_with``
+lambdas, with 32-64 ``xxhash64`` calls per element, runs interpreted
+(higher-order-function lambdas are not whole-stage-codegen'd) at
+~16 ms/doc.
 
 The band/bucket joins shuffle only (band_idx, band_hash, doc_id) —
 never the document text — so shuffle volume is O(docs × bands × 16B)
@@ -39,8 +36,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.vectors import cosine_sim
-
-_MAX_LONG = 9223372036854775807
 
 
 def tokens(col: Column | str, lowercase: bool = True) -> Column:
@@ -342,41 +337,6 @@ def dedup_paragraphs_groupby(
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
-def minhash_signature(sh: Column, num_hashes: int = 32) -> Column:
-    """K-wide minhash signature in ONE pass over the shingle array.
-
-    h_i(s) = xxhash64(s, seed=i); signature[i] = min over shingles.
-    Implemented as ``aggregate(shingles, [MAX]*K, zip_with least)`` —
-    stays in codegen, no shuffle, no UDF."""
-    init = F.array(*[F.lit(_MAX_LONG).cast("long") for _ in range(num_hashes)])
-    return F.aggregate(
-        sh,
-        init,
-        lambda acc, s: F.zip_with(
-            acc,
-            F.array(*[F.xxhash64(s, F.lit(i)) for i in range(num_hashes)]),
-            lambda a, b: F.least(a, b),
-        ),
-    )
-
-
-def minhash_bands(sig: Column, bands: int, rows: int) -> Column:
-    """Split a signature into ``bands`` hashes of ``rows`` values each:
-    array<struct<band_idx:int, band_hash:long>>."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.struct(
-            b.cast("int").alias("band_idx"),
-            F.xxhash64(
-                F.array_join(
-                    F.transform(F.slice(sig, b * rows + 1, rows), lambda v: v.cast("string")),
-                    ",",
-                )
-            ).alias("band_hash"),
-        ),
-    )
-
-
 def minhash_lsh_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -568,46 +528,11 @@ def _minhash_pairs_carry(
 # SimHash
 # ---------------------------------------------------------------------------
 
-def simhash64(tok: Column) -> Column:
-    """64-bit SimHash of a token array, fully in Catalyst.
-
-    Per token: xxhash64 → per bit ±1 vote; fingerprint bit i set when
-    the summed vote is positive."""
-    bit_votes = F.aggregate(
-        tok,
-        F.array(*[F.lit(0).cast("long") for _ in range(64)]),
-        lambda acc, t: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    F.when(
-                        F.shiftright(F.xxhash64(t), i).bitwiseAND(F.lit(1)) == 1, 1
-                    )
-                    .otherwise(-1)
-                    .cast("long")
-                    for i in range(64)
-                ]
-            ),
-            lambda a, b: a + b,
-        ),
-    )
-    packed = None
-    for i in range(64):
-        val = (1 << i) if i < 63 else -(1 << 63)  # bit 63 = sign bit of long
-        bit = F.when(F.element_at(bit_votes, i + 1) > 0, F.lit(val).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        packed = bit if packed is None else packed.bitwiseOR(bit)
-    return packed
-
-
 def simhash_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 3,
-    max_bucket_size: int | None = 4096,
-    overflow: str = "join",
 ) -> DataFrame:
     """Near-dup pairs by SimHash banding: two fingerprints within hamming
     ``k`` of each other agree exactly on at least one of ``k + 1``
@@ -619,8 +544,8 @@ def simhash_pairs(
     silently missed hamming-4..16 pairs when called with
     ``max_hamming=16``).  Small thresholds keep chunks wide and buckets
     selective — at 64 bits, ``max_hamming`` ≤ 7 keeps chunks ≥ 8 bits;
-    beyond that the banding degrades toward all-pairs and a warning is
-    the caller's cue to rethink the threshold.
+    beyond that the banding degrades toward all-pairs (nothing warns;
+    the caller picks the threshold).
 
     Every bucket, whatever its size, goes through ONE 2-D salted
     self-join on (chunk_idx, chunk): members are split into groups of
@@ -630,21 +555,11 @@ def simhash_pairs(
     degenerate bucket is inherent to the semantics (those pairs exist);
     run exact dedup first if byte-identical floods are expected.
 
-    ``max_bucket_size`` acts only under ``overflow='drop'``:
-
-    - ``'join'`` (default): ``max_bucket_size`` does nothing; buckets of
-      every size are joined and the pigeonhole recall guarantee holds.
-    - ``'drop'``: buckets above ``max_bucket_size`` vanish (the round-2
-      behavior, trading recall for bounded candidate volume); pairs
-      that agree on another, selective chunk still surface.
-
     The fingerprint/bucket frame is referenced by both join sides and is
     ``localCheckpoint(eager=False)``-ed.  That is not lazy under AQE:
     the call runs the bucket window's exchange, and the fingerprint UDF
     with it, while the plan is being built.  Its blocks stay in executor
     storage until the session ends (nothing unpersists them)."""
-    if overflow not in ("join", "drop"):
-        raise ValueError("overflow must be 'join' or 'drop'")
     if max_hamming < 0:
         raise ValueError("max_hamming must be >= 0")
     n_chunks = max_hamming + 1
@@ -715,14 +630,10 @@ def simhash_pairs(
     # over-cap path always used.
     from pyspark.sql import Window
 
-    cap = max_bucket_size if max_bucket_size is not None else 2_147_483_647
     chunk_w = Window.partitionBy("chunk_idx", "chunk")
     sized = chunks.withColumn("_bs", F.count(F.lit(1)).over(chunk_w)).where(
         F.col("_bs") >= 2
     )
-    if overflow == "drop" and max_bucket_size is not None:
-        # round-2 lossy behavior: over-cap buckets vanish entirely
-        sized = sized.where(F.col("_bs") <= cap)
     salt_target = 256
     sized = sized.withColumn(
         "_ns", F.ceil(F.col("_bs") / F.lit(salt_target)).cast("int")

@@ -36,15 +36,6 @@ def extract_json_udf(text: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(out, columns=["json", "repaired"])
 
 
-@pandas_udf(T.StringType())
-def detect_format_udf(text: pd.Series) -> pd.Series:
-    """'json' | 'yaml' | 'unknown' per payload — the format-detection
-    ladder (``utils/__init__.py:442-533``), Arrow-batched."""
-    from ..kernel.json_extract import detect_format
-
-    return text.map(detect_format)
-
-
 _STRUCTURED_RESULT = T.StructType(
     [
         T.StructField("json", T.StringType()),
@@ -210,11 +201,6 @@ def flatten_struct(df: DataFrame, sep: str = ".") -> DataFrame:
 
     cols = [c.alias(name) for name, c in leaves(df.schema)]
     return df.select(*cols)
-
-
-def json_field(col: Column | str, path: str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.get_json_object(c, path)
 
 
 def discover_json_schema(df: DataFrame, col: str, sample: int = 200) -> T.StructType:

@@ -11,8 +11,9 @@ sort keys, built here from pure Catalyst integer arithmetic (no UDF,
 engine-reproducible, oracle-checkable).
 
 Pieces:
-- :func:`quantize_minmax` — value → [0, 2^bits) rank via a broadcast
-  1-row min/max aggregate (no global window, no single-task sort).
+- :func:`quantize_minmax_multi` — each column → [0, 2^bits) rank via
+  ONE broadcast 1-row min/max aggregate over all columns (no global
+  window, no single-task sort).
 - :func:`zorder_key` — bit-interleave quantized columns into one long.
 - :func:`zorder_layout` — repartitionByRange on the key (+ in-partition
   sort) so a downstream ``write.parquet`` emits z-clustered files.
@@ -22,25 +23,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def quantize_minmax(df: DataFrame, col: str, bits: int) -> DataFrame:
-    """Add ``{col}_q``: the column linearly quantized to [0, 2^bits)
-    over its observed min/max.  The min/max come from ONE 1-row
-    aggregate broadcast back (a cross join against a single row — no
-    window, no extra pass per column beyond the shared scan)."""
-    c = F.col(col).cast("double")
-    stats = df.agg(
-        F.min(c).alias(f"_min_{col}"), F.max(c).alias(f"_max_{col}")
-    )
-    lo, hi = F.col(f"_min_{col}"), F.col(f"_max_{col}")
-    buckets = F.lit((1 << bits) - 1)
-    q = F.when(hi == lo, F.lit(0)).otherwise(
-        F.floor((c - lo) / (hi - lo) * buckets)
-    )
-    return df.crossJoin(F.broadcast(stats)).withColumn(
-        f"{col}_q", F.least(q, buckets).cast("long")
-    ).drop(f"_min_{col}", f"_max_{col}")
 
 
 def zorder_key(cols: list[Column | str], bits: int = 16) -> Column:
@@ -63,10 +45,11 @@ def zorder_key(cols: list[Column | str], bits: int = 16) -> Column:
 
 
 def quantize_minmax_multi(df: DataFrame, cols: list[str], bits: int) -> DataFrame:
-    """Add ``{col}_q`` for every column from ONE shared min/max
-    aggregate (a single extra scan + one broadcast total — per-column
-    :func:`quantize_minmax` calls would re-scan the input per
-    dimension)."""
+    """Add ``{col}_q`` for every column: the column linearly quantized
+    to [0, 2^bits) over its observed min/max.  Every column's min/max
+    comes from ONE shared 1-row aggregate broadcast back (a single extra
+    scan + one broadcast total, however many columns; a per-column
+    aggregate would re-scan the input per dimension)."""
     aggs = []
     for c in cols:
         v = F.col(c).cast("double")

@@ -93,31 +93,14 @@ def _projections(dim: int, bits: int, seed: int) -> list[list[float]]:
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(bits)]
 
 
-def srp_bucket(vec_col, planes: list[list[float]]):
-    """B-bit sign-random-projection bucket id as a Catalyst expression:
-    bit_j = (v · plane_j) > 0, packed into an int."""
-    bits = []
-    for j, plane in enumerate(planes):
-        lit_plane = F.array(*[F.lit(x) for x in plane])
-        dot = F.aggregate(
-            F.zip_with(vec_col, lit_plane, lambda a, b: a.cast("double") * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(dot > 0, F.lit(1 << j)).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out.cast("int")
-
-
 def srp_buckets_udf(planes_per_table: list[list[list[float]]]):
     """All tables' SRP buckets in one vectorized numpy pass.
 
-    The pure-Catalyst :func:`srp_bucket` builds a (tables × bits × dim)
-    literal expression tree whose codegen cost dwarfs the arithmetic;
-    one Arrow-batched matmul computes every bucket at ~memory bandwidth.
-    Returns array<int> of length n_tables per row."""
+    Bucket bit j of a table is ``(v · plane_j) > 0``, packed into an
+    int.  One Arrow-batched matmul computes every table's bits at about
+    memory bandwidth; the same dot products as Catalyst lambdas would be
+    a (tables × bits × dim) literal expression tree, interpreted per
+    element.  Returns array<int> of length n_tables per row."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, IntegerType

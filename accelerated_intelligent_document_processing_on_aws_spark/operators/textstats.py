@@ -117,17 +117,6 @@ def kgram_min_fingerprint(text: Column | str, k: int = 16) -> Column:
     return F.array_min(grams)
 
 
-def text_profile(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """One-pass profile: tokens, BPE-ish tokens, language, fingerprint."""
-    return docs.select(
-        F.col(id_col),
-        ws_token_count(text_col).alias("n_tokens_ws"),
-        bpe_ish_token_count(text_col).alias("n_tokens_bpe"),
-        lang_id(text_col).alias("pred_lang"),
-        fingerprint_md5(text_col).alias("fingerprint"),
-    )
-
-
 def gopher_quality_flags(
     df: DataFrame,
     text_col: str = "text",

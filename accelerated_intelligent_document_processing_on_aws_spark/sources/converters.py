@@ -13,11 +13,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def parse_csv_column(df: DataFrame, col: str, schema: str, out: str = "rec") -> DataFrame:
-    """Typed parse of a CSV-line column via ``from_csv`` (JVM parser)."""
-    return df.withColumn(out, F.from_csv(F.col(col), schema))
-
-
 def csv_fields(col: Column | str, sep: str = ",") -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.transform(F.split(c, sep), lambda x: F.trim(x))

@@ -129,13 +129,3 @@ def _row_group_midpoints(uri: str) -> list[int]:
         size = sum(rg.column(j).total_compressed_size for j in range(rg.num_columns))
         mids.append(start + size // 2)
     return mids
-
-
-def register_testdata(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for Spark SQL plans."""
-    for t in TESTDATA_TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
-def read_transcripts(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)

@@ -253,112 +253,3 @@ def streaming_sections(
             timeout,
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# Spark 4 transformWithStateInPandas implementation (same contract)
-# ---------------------------------------------------------------------------
-
-def _advance_segments(conv_id, st, records, max_pending):
-    """Pure per-batch segment advance shared by both stateful APIs.
-
-    ``st`` = (last_class, last_section, last_turn, pending dict, n_dups);
-    ``records`` = iterable of (turn_idx, classification, boundary).
-    Returns (new_st, out_rows) with out_rows shaped like OUTPUT_SCHEMA."""
-    last_class, last_section, last_turn, pending, n_dups = st
-    for ti, cls, boundary in records:
-        ti = int(ti)
-        if ti <= last_turn or ti in pending:
-            n_dups += 1
-            continue
-        pending[ti] = (cls, boundary)
-    out = []
-    while (last_turn + 1) in pending:
-        ti = last_turn + 1
-        cls, boundary = pending.pop(ti)
-        if last_class is None or cls != last_class or boundary == "start":
-            last_section += 1
-        last_class = cls
-        last_turn = ti
-        out.append((conv_id, ti, cls, last_section))
-    if len(pending) > max_pending:
-        raise RuntimeError(
-            f"conv {conv_id}: reorder buffer {len(pending)} exceeds "
-            f"{max_pending} after frontier drain — upstream turn gap, "
-            "refusing to emit mis-numbered sections"
-        )
-    new_st = (last_class, last_section, last_turn, pending, n_dups)
-    rows = [
-        (c, t, cl, s, len(pending), n_dups, False) for c, t, cl, s in out
-    ]
-    return new_st, rows
-
-
-def make_segment_processor(max_pending: int = MAX_PENDING_DEFAULT):
-    """BIO segmentation as a Spark 4 ``StatefulProcessor`` — the
-    ``transformWithStateInPandas`` successor API to
-    ``applyInPandasWithState`` (typed value state instead of a tuple
-    blob, per-state TTL, composable timers).  Same output contract and
-    reorder-buffer semantics as :func:`streaming_sections`; the shared
-    core is :func:`_advance_segments`."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class SegmentProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "seg",
-                "last_class string, last_section int, last_turn int, "
-                "pending_json string, n_dups int",
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            conv_id = key[0]
-            if self._state.exists():
-                lc, ls, lt, pj, nd = self._state.get()
-                pending = {int(k): tuple(v) for k, v in json.loads(pj).items()}
-                st = (lc, ls, lt, pending, nd)
-            else:
-                st = (None, 0, -1, {}, 0)
-            out_rows = []
-            for pdf in rows:
-                st, out = _advance_segments(
-                    conv_id,
-                    st,
-                    zip(pdf["turn_idx"], pdf["classification"], pdf["boundary"]),
-                    max_pending,
-                )
-                out_rows.extend(out)
-            lc, ls, lt, pending, nd = st
-            self._state.update(
-                (lc, ls, lt, json.dumps({str(k): list(v) for k, v in pending.items()}), nd)
-            )
-            yield pd.DataFrame(
-                out_rows, columns=[f.name for f in OUTPUT_SCHEMA.fields]
-            )
-
-        def close(self) -> None:
-            pass
-
-    return SegmentProcessor()
-
-
-def streaming_sections_tws(
-    extracted_stream: DataFrame, max_pending: int = MAX_PENDING_DEFAULT
-) -> DataFrame:
-    """:func:`streaming_sections` on the Spark 4 transformWithState
-    API.  Append mode, processing-time timers unused (the reorder
-    buffer drains on arrival; gap-flush policy stays with the
-    applyInPandasWithState variant until timer parity is needed)."""
-    return (
-        extracted_stream.select("conv_id", "turn_idx", "classification", "boundary")
-        .groupBy("conv_id")
-        .transformWithStateInPandas(
-            make_segment_processor(max_pending),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="append",
-            timeMode="none",
-        )
-    )

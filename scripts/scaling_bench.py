@@ -22,6 +22,11 @@ import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "accelerated_intelligent_document_processing_on_aws_spark"
+sys.path.insert(0, REPO)
+
+from accelerated_intelligent_document_processing_on_aws_spark.sources.session import (  # noqa: E402
+    driver_memory,
+)
 
 
 def build_pyfiles_zip(path: str) -> str:
@@ -51,7 +56,7 @@ def run_at(
     cmd = prefix + [
         "spark-submit",
         "--master", f"local[{cores}]",
-        "--driver-memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"),
+        "--driver-memory", driver_memory(),
         "--conf", "spark.sql.session.timeZone=UTC",
         "--conf", f"spark.sql.shuffle.partitions={max(cores * 2, 16)}",
         "--conf", "spark.sql.adaptive.enabled=true",
@@ -109,7 +114,6 @@ def main() -> None:
     os.makedirs(args.workdir, exist_ok=True)
     corpus = os.path.join(args.workdir, f"transcripts_{args.convs}.parquet")
     if not os.path.exists(corpus):
-        sys.path.insert(0, REPO)
         from accelerated_intelligent_document_processing_on_aws_spark.fixtures import (
             write_transcripts_parquet,
         )

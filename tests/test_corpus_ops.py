@@ -702,20 +702,16 @@ class TestAsofChunked:
 
 class TestSimhashOverflow:
     def test_overcap_bucket_pairs_survive_with_join_overflow(self, spark):
-        """Round-3: a bucket above max_bucket_size must still yield its
-        pairs via the self-join overflow path (full pigeonhole recall);
-        overflow='drop' reproduces the round-2 lossy behavior."""
+        """Every bucket goes through the salted self-join, whatever its
+        size, so a degenerate bucket yields all its pairs (full
+        pigeonhole recall)."""
         # 8 identical docs: every chunk bucket has size 8
         docs = spark.createDataFrame(
             [(i, "same exact tokens all the way down " * 3) for i in range(8)],
             "doc_id int, text string",
         )
-        full = dedup.simhash_pairs(docs, max_hamming=3, max_bucket_size=4)
+        full = dedup.simhash_pairs(docs, max_hamming=3)
         assert full.count() == 8 * 7 // 2  # all pairs, hamming 0
-        dropped = dedup.simhash_pairs(
-            docs, max_hamming=3, max_bucket_size=4, overflow="drop"
-        )
-        assert dropped.count() == 0
 
 
 class TestPackRanged:

@@ -501,104 +501,6 @@ class TestStreamingSessionWindows:
         assert 59 in by_start and by_start[59]["n_events"] == 1
 
 
-def _protobuf_available():
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-class TestTransformWithState:
-    def test_processor_direct_matches_batch_bio(self):
-        """transformWithState's StatefulProcessor, driven directly with
-        a fake ValueState: same frontier/buffer/dup semantics as the
-        applyInPandasWithState path (shared _advance_segments core).
-        The e2e form below needs google.protobuf (absent here)."""
-        import pandas as pd
-
-        from accelerated_intelligent_document_processing_on_aws_spark.streaming.stateful import (
-            make_segment_processor,
-        )
-
-        class _FakeValueState:
-            def __init__(self):
-                self._v = None
-
-            def exists(self):
-                return self._v is not None
-
-            def get(self):
-                return self._v
-
-            def update(self, v):
-                self._v = v
-
-        class _FakeHandle:
-            def getValueState(self, name, schema, ttlDurationMs=None):
-                return _FakeValueState()
-
-        proc = make_segment_processor()
-        proc.init(_FakeHandle())
-        got = {}
-        # deliver the later shard FIRST (out of order)
-        for chunk in (_TURNS[4:], _TURNS[:4]):
-            pdf = pd.DataFrame(
-                {
-                    "conv_id": ["c1"] * len(chunk),
-                    "turn_idx": [t[0] for t in chunk],
-                    "classification": [t[1] for t in chunk],
-                    "boundary": [t[2] for t in chunk],
-                }
-            )
-            for out in proc.handleInputRows(("c1",), iter([pdf]), None):
-                for _, row in out.iterrows():
-                    got[row["turn_idx"]] = row["section_id"]
-        assert got == _WANT
-
-    @pytest.mark.skipif(
-        not _protobuf_available(),
-        reason="transformWithStateInPandas driver worker needs google.protobuf "
-               "(not installed in this sandbox; no pip allowed)",
-    )
-    def test_tws_matches_applyinpandas_variant(self, spark, tmp_path):
-        """The Spark 4 transformWithStateInPandas implementation must
-        produce exactly the applyInPandasWithState result, including
-        out-of-order buffering across micro-batches."""
-        from accelerated_intelligent_document_processing_on_aws_spark.streaming.stateful import (
-            streaming_sections_tws,
-        )
-
-        shard_dir = tmp_path / "tws_shards"
-        # later turns arrive first (earlier mtime): the reorder buffer
-        # must hold them, same as the older API's test
-        _write_turn_shards(
-            shard_dir, (_TURNS[4:], _TURNS[:4]), mtimes=(1_700_000_000, 1_700_000_060)
-        )
-        stream = (
-            spark.readStream.schema(
-                "conv_id string, turn_idx int, classification string, boundary string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(shard_dir))
-        )
-        out_dir = str(tmp_path / "tws_out")
-        q = (
-            streaming_sections_tws(stream)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", str(tmp_path / "tws_ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        rows = spark.read.parquet(out_dir).collect()
-        got = {r["turn_idx"]: r["section_id"] for r in rows}
-        assert got == _WANT
-        assert all(not r["gap_flushed"] for r in rows)
-
-
 class TestStreamingDedup:
     def test_replayed_rows_dropped_within_watermark(self, spark, tmp_path):
         """At-least-once delivery (the reference's SQS replay case):
