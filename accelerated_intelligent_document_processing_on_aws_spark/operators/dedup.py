@@ -656,7 +656,7 @@ def simhash_pairs(
     # known-bounded size; the sort-merge default pays a per-pair buffered
     # row copy on the quadratic in-key emission (an HOF-array variant
     # that filters before emission was measured SLOWER — interpreted
-    # lambda ≈ join-row cost — and is documented in OPTIMIZATION_r08.md)
+    # lambda ≈ join-row cost — NOTES.md, "Round 8 optimizations")
     pairs = (
         left.alias("a")
         .join(right.alias("b").hint("SHUFFLE_HASH"), ["chunk_idx", "chunk", "_g1", "_g2"])

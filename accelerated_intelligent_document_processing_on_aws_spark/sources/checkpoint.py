@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extract import drop_internal, extract_turns, extract_wave
+from .reporting import coalesce_rewrite
 
 MANIFEST = "_manifest.json"
 
@@ -52,47 +53,39 @@ def read_manifest(out_dir: str) -> dict:
     return {"done_buckets": [], "n_buckets": None, "snapshot_id": 0, "snapshots": []}
 
 
-def _replay_state(history: list[dict], upto_snapshot_id: int | None = None) -> set:
-    """Reconstruct ``done_buckets`` as of a snapshot id by replaying the
-    delta history (or the FULL history when ``upto_snapshot_id`` is
-    None).  Entries may be delta-form (``added``/``removed``) or
-    legacy full-state form (``done_buckets``) — a legacy entry simply
-    resets the accumulator, so old manifests replay correctly."""
-    state: set = set()
+def _replay(history: list[dict]):
+    """Yield ``(entry, done_buckets, data_locations)`` after each entry
+    of the snapshot history: the set of done buckets and the
+    bucket→location mapping as of that entry's snapshot.  Entries are
+    deltas — ``added``/``removed`` buckets, ``data`` as
+    ``{bucket: location}`` with ``None`` removing the bucket — or
+    legacy full-state entries (``done_buckets``), which reset the done
+    set, so old manifests replay correctly.  The yielded set and dict
+    are the replay's own state: copy them to keep them past the next
+    step."""
+    done: set = set()
+    data: dict = {}
     for snap in history:
         if "done_buckets" in snap:  # legacy full-state entry
-            state = set(snap["done_buckets"])
+            done = set(snap["done_buckets"])
         else:
-            state.difference_update(snap.get("removed", ()))
-            state.update(snap.get("added", ()))
-        if upto_snapshot_id is not None and snap["snapshot_id"] == upto_snapshot_id:
-            return state
-    if upto_snapshot_id is not None:
-        raise KeyError(f"no snapshot {upto_snapshot_id}")
-    return state
-
-
-def _replay_data(
-    history: list[dict], upto_snapshot_id: int | None = None
-) -> dict:
-    """Reconstruct the bucket→data-location mapping as of a snapshot id
-    by replaying ``data`` deltas (``{bucket: location}``; a ``None``
-    location removes the bucket).  Mirrors :func:`_replay_state` for
-    the versioned-data layout."""
-    mapping: dict = {}
-    seen = False
-    for snap in history:
+            done.difference_update(snap.get("removed", ()))
+            done.update(snap.get("added", ()))
         for b, loc in snap.get("data", {}).items():
             if loc is None:
-                mapping.pop(b, None)
+                data.pop(b, None)
             else:
-                mapping[b] = loc
-        if upto_snapshot_id is not None and snap["snapshot_id"] == upto_snapshot_id:
-            seen = True
-            break
-    if upto_snapshot_id is not None and not seen:
-        raise KeyError(f"no snapshot {upto_snapshot_id}")
-    return mapping
+                data[b] = loc
+        yield snap, done, data
+
+
+def _as_of(out_dir: str, history: list[dict], snapshot_id: int):
+    """``(entry, done_buckets, data_locations)`` as of ``snapshot_id``;
+    ``KeyError`` for an id the history does not hold."""
+    for snap, done, data in _replay(history):
+        if snap["snapshot_id"] == snapshot_id:
+            return snap, done, data
+    raise KeyError(f"no snapshot {snapshot_id} in {out_dir}")
 
 
 def _write_manifest(out_dir: str, manifest: dict, operation: str = "wave") -> None:
@@ -105,35 +98,36 @@ def _write_manifest(out_dir: str, manifest: dict, operation: str = "wave") -> No
     reference's workflow-keyed cache generations.  Deltas keep the
     manifest O(total bucket churn), not O(waves × n_buckets) — a
     4096-bucket wave_size-1 run stays linear, where full-state history
-    entries grew quadratically (ADVICE r5).  With a real Iceberg
-    catalog these commits become table snapshots and the API is
-    unchanged; DATA time travel (reading old file sets) needs the
-    catalog's file-level manifests and is documented as env-blocked."""
+    entries grew quadratically (ADVICE r5).
+
+    The previous snapshot's state is the manifest on disk: one writer
+    commits at a time, so ``manifest`` must have been read from the
+    commit it replaces (checked).  With a real Iceberg catalog these
+    commits become table snapshots and the API is unchanged."""
+    prev = read_manifest(out_dir)
+    if prev.get("snapshot_id", 0) != manifest.get("snapshot_id", 0):
+        raise RuntimeError(f"{out_dir}: the manifest changed since it was read")
     sid = int(manifest.get("snapshot_id", 0)) + 1
     manifest["snapshot_id"] = sid
-    history = manifest.setdefault("snapshots", [])
-    prev = _replay_state(history)
-    cur = set(manifest["done_buckets"])
     entry = {
         "snapshot_id": sid,
         "operation": operation,
         "n_buckets": manifest["n_buckets"],
     }
-    added = sorted(cur - prev)
-    removed = sorted(prev - cur)
-    if added:
-        entry["added"] = added
-    if removed:
-        entry["removed"] = removed
+    before, cur = set(prev["done_buckets"]), set(manifest["done_buckets"])
+    if cur - before:
+        entry["added"] = sorted(cur - before)
+    if before - cur:
+        entry["removed"] = sorted(before - cur)
     if "data_locations" in manifest:
         # versioned-data layout: delta the bucket→location mapping too
-        prev_data = _replay_data(history)
-        cur_data = manifest["data_locations"]
-        delta = {b: loc for b, loc in cur_data.items() if prev_data.get(b) != loc}
-        delta.update({b: None for b in prev_data if b not in cur_data})
+        before = prev.get("data_locations", {})
+        cur = manifest["data_locations"]
+        delta = {b: loc for b, loc in cur.items() if before.get(b) != loc}
+        delta.update({b: None for b in before if b not in cur})
         if delta:
             entry["data"] = delta
-    history.append(entry)
+    manifest.setdefault("snapshots", []).append(entry)
     p = os.path.join(out_dir, MANIFEST)
     tmp = p + ".tmp"
     with open(tmp, "w") as f:
@@ -143,18 +137,12 @@ def _write_manifest(out_dir: str, manifest: dict, operation: str = "wave") -> No
 
 def manifest_as_of(out_dir: str, snapshot_id: int) -> dict:
     """Checkpoint state as of a snapshot id (exact match required)."""
-    manifest = read_manifest(out_dir)
-    history = manifest.get("snapshots", [])
-    try:
-        state = _replay_state(history, snapshot_id)
-    except KeyError:
-        raise KeyError(f"no snapshot {snapshot_id} in {out_dir}") from None
-    n_buckets = next(
-        s["n_buckets"] for s in history if s["snapshot_id"] == snapshot_id
+    snap, done, _ = _as_of(
+        out_dir, read_manifest(out_dir).get("snapshots", []), snapshot_id
     )
     return {
-        "done_buckets": sorted(state),
-        "n_buckets": n_buckets,
+        "done_buckets": sorted(done),
+        "n_buckets": snap["n_buckets"],
         "snapshot_id": snapshot_id,
     }
 
@@ -177,30 +165,28 @@ def rollback_to_snapshot(
     ``allow_undelete=True`` is passed explicitly; callers who force it
     must re-apply the audit log with :func:`replay_deletions` after the
     resumed run to restore compliance (ADVICE r5)."""
-    target = manifest_as_of(out_dir, snapshot_id)
     manifest = read_manifest(out_dir)
+    history = manifest.get("snapshots", [])
+    snap, done, data = _as_of(out_dir, history, snapshot_id)
     later_deletes = [
-        s
-        for s in manifest.get("snapshots", [])
+        s["snapshot_id"]
+        for s in history
         if s["snapshot_id"] > snapshot_id and s["operation"] == "delete"
     ]
     if later_deletes and not allow_undelete:
-        ids = [s["snapshot_id"] for s in later_deletes]
         raise ValueError(
             f"rollback to snapshot {snapshot_id} crosses delete commit(s) "
-            f"{ids}: re-extraction would resurrect deleted conversations. "
+            f"{later_deletes}: re-extraction would resurrect deleted conversations. "
             "Pass allow_undelete=True to force, then run replay_deletions() "
             "after the resumed extraction to re-apply the deletion audit log."
         )
-    manifest["done_buckets"] = sorted(target["done_buckets"])
-    manifest["n_buckets"] = target["n_buckets"]
+    manifest["done_buckets"] = sorted(done)
+    manifest["n_buckets"] = snap["n_buckets"]
     if "data_locations" in manifest:
         # versioned-data layout: restore the bucket→location mapping —
         # the rolled-back state is READABLE immediately (old files were
         # never mutated), no re-extraction required.
-        manifest["data_locations"] = _replay_data(
-            manifest.get("snapshots", []), snapshot_id
-        )
+        manifest["data_locations"] = dict(data)
     _write_manifest(out_dir, manifest, operation=f"rollback_to_{snapshot_id}")
     return manifest
 
@@ -257,21 +243,28 @@ def _write_lineage(out_dir: str, tally: dict) -> None:
         os.replace(tmp, os.path.join(part_dir, "part-00000.parquet"))
 
 
-def _write_wave(
+def _data_loc(sid: int, bucket) -> str:
+    return f"v={sid}/bucket_pt={bucket}"
+
+
+def _run_waves(
     spark: SparkSession,
-    src: DataFrame,
-    wave: list[int],
+    transcripts: DataFrame,
     out_dir: str,
-    dest: str,
-    partition_col: str,
+    n_buckets: int,
+    wave_size: int,
+    fail_after_waves: int | None,
     salt: int,
-) -> None:
-    """Extract one wave of buckets and write it to ``dest``, partitioned
-    by ``partition_col`` (``bucket`` itself, or a column copied from
-    it), then write the wave's lineage.  ``src`` carries the ``bucket``
-    column.  The wave's partition directories under ``dest`` and
-    ``lineage/`` are removed first, so a re-run of the wave replaces
-    what an earlier attempt wrote.
+    versioned: bool,
+) -> str:
+    """The bucket-wave loop of both extraction layouts: extract the
+    buckets the manifest does not list as done, ``wave_size`` at a
+    time, and commit each wave to the manifest after its write.  The
+    in-place layout writes ``extracted/bucket=K/``; the versioned one
+    writes ``data/v=<sid>/bucket_pt=K/`` under the snapshot id the
+    wave's commit takes, and repoints the bucket→location mapping.  A
+    wave first removes its partition directories there and under
+    ``lineage/``, so a re-run replaces what an earlier attempt wrote.
 
     The lineage counts come from the kernel tasks of the write job
     itself.  Each is counted exactly once because the kernel runs in the
@@ -282,14 +275,53 @@ def _write_wave(
     task adds nothing twice.  A shuffle between the kernel and the write
     would break this, since a map task reruns when its output is lost
     and its updates count again."""
-    for b in wave:
-        shutil.rmtree(os.path.join(dest, f"{partition_col}={b}"), ignore_errors=True)
-        shutil.rmtree(os.path.join(out_dir, "lineage", f"bucket={b}"), ignore_errors=True)
-    extracted, tally = extract_wave(src.where(F.col("bucket").isin(wave)), salt=salt)
-    if partition_col != "bucket":
-        extracted = extracted.withColumn(partition_col, F.col("bucket"))
-    extracted.write.mode("append").partitionBy(partition_col).parquet(dest)
-    _write_lineage(out_dir, tally.value)
+    os.makedirs(out_dir, exist_ok=True)
+    manifest = read_manifest(out_dir)
+    if manifest["n_buckets"] not in (None, n_buckets):
+        raise ValueError("n_buckets changed across resume")
+    if versioned and manifest.get("stream_batches"):
+        raise ValueError(
+            f"{out_dir} holds streaming snapshot commits; bucket waves "
+            "would mix layouts — use a separate output"
+        )
+    manifest["n_buckets"] = n_buckets
+    done = set(manifest["done_buckets"])
+    pending = [b for b in range(n_buckets) if b not in done]
+
+    src = transcripts.withColumn("bucket", bucket_col(n_buckets))
+    waves = [pending[i : i + wave_size] for i in range(0, len(pending), wave_size)]
+    for wi, wave in enumerate(waves):
+        if fail_after_waves is not None and wi >= fail_after_waves:
+            raise RuntimeError("injected crash for resume test")
+        sid = int(manifest.get("snapshot_id", 0)) + 1
+        if versioned:
+            dest, part_col = os.path.join(out_dir, "data", f"v={sid}"), "bucket_pt"
+        else:
+            dest, part_col = os.path.join(out_dir, "extracted"), "bucket"
+        for b in wave:
+            shutil.rmtree(os.path.join(dest, f"{part_col}={b}"), ignore_errors=True)
+            shutil.rmtree(os.path.join(out_dir, "lineage", f"bucket={b}"), ignore_errors=True)
+        extracted, tally = extract_wave(src.where(F.col("bucket").isin(wave)), salt=salt)
+        if versioned:
+            # bucket_pt drives the directory layout; bucket stays a
+            # REGULAR column inside the files, so a multi-path snapshot
+            # read needs no partition-discovery basePath
+            extracted = extracted.withColumn(part_col, F.col("bucket"))
+        extracted.write.mode("append").partitionBy(part_col).parquet(dest)
+        _write_lineage(out_dir, tally.value)
+        done.update(wave)
+        manifest["done_buckets"] = sorted(done)
+        if versioned:
+            data = manifest.setdefault("data_locations", {})
+            for b in wave:
+                # map only the locations partitionBy created: a bucket
+                # with zero rows writes no directory, and a dangling
+                # pointer would make every later read_snapshot raise.
+                # An unmapped bucket reads as empty.
+                if os.path.isdir(os.path.join(out_dir, "data", _data_loc(sid, b))):
+                    data[str(b)] = _data_loc(sid, b)
+        _write_manifest(out_dir, manifest, operation=f"wave:{sorted(wave)}")
+    return out_dir
 
 
 def run_checkpointed_extraction(
@@ -307,32 +339,90 @@ def run_checkpointed_extraction(
     Output layout: ``out_dir/extracted/bucket=K/...`` plus
     ``out_dir/lineage/bucket=K/...`` and the manifest.
     """
-    os.makedirs(out_dir, exist_ok=True)
-    manifest = read_manifest(out_dir)
-    if manifest["n_buckets"] not in (None, n_buckets):
-        raise ValueError("n_buckets changed across resume")
-    manifest["n_buckets"] = n_buckets
-    done = set(manifest["done_buckets"])
-    pending = [b for b in range(n_buckets) if b not in done]
-
-    src = transcripts.withColumn("bucket", bucket_col(n_buckets))
-    waves = [pending[i : i + wave_size] for i in range(0, len(pending), wave_size)]
-    for wi, wave in enumerate(waves):
-        if fail_after_waves is not None and wi >= fail_after_waves:
-            raise RuntimeError("injected crash for resume test")
-        # idempotent overwrite of exactly this wave's bucket partitions
-        _write_wave(
-            spark, src, wave, out_dir, os.path.join(out_dir, "extracted"), "bucket", salt
-        )
-        done.update(wave)
-        manifest["done_buckets"] = sorted(done)
-        _write_manifest(out_dir, manifest, operation=f"wave:{sorted(wave)}")
-    return out_dir
+    return _run_waves(
+        spark, transcripts, out_dir, n_buckets, wave_size, fail_after_waves, salt,
+        versioned=False,
+    )
 
 
 def resume_pending(out_dir: str, n_buckets: int) -> list[int]:
     done = set(read_manifest(out_dir)["done_buckets"])
     return [b for b in range(n_buckets) if b not in done]
+
+
+def _delete(
+    spark: SparkSession,
+    out_dir: str,
+    conv_ids: list[str],
+    dry_run: bool,
+    versioned: bool,
+) -> dict:
+    """The deleter of both layouts: hash the conversations to their
+    buckets, count each bucket's matching rows and, unless ``dry_run``,
+    rewrite the bucket without them and log the deletion in one
+    ``delete`` commit.  In place, a bucket is restaged and swapped; in
+    the versioned layout it is written to a new location (or unmapped,
+    when no row is left) and the mapping repointed."""
+    manifest = read_manifest(out_dir)
+    n_buckets = manifest["n_buckets"]
+    data = manifest.get("data_locations", {})
+    if not versioned and n_buckets is None:
+        raise ValueError(f"{out_dir} has no completed extraction manifest")
+    if versioned and manifest.get("stream_batches"):
+        raise ValueError(
+            f"{out_dir} holds stream-committed snapshots (no hash-bucket "
+            "targeting); filter-rewrite the batch locations instead"
+        )
+    if versioned and (n_buckets is None or not data):
+        raise ValueError(f"{out_dir} has no versioned extraction manifest")
+    sid = int(manifest.get("snapshot_id", 0)) + 1
+    ids_df = spark.createDataFrame([(c,) for c in conv_ids], "conv_id string")
+    buckets = sorted(
+        r["b"]
+        for r in ids_df.select(bucket_col(n_buckets).alias("b")).distinct().collect()
+    )
+    deleted: dict[int, int] = {}
+    for b in buckets:
+        if versioned:
+            if str(b) not in data:
+                continue
+            path = os.path.join(out_dir, "data", data[str(b)])
+        else:
+            path = os.path.join(out_dir, "extracted", f"bucket={b}")
+            if not os.path.isdir(path):
+                continue
+        df = spark.read.parquet(path)
+        n = df.where(F.col("conv_id").isin(conv_ids)).count()
+        if n == 0:
+            continue
+        deleted[b] = n
+        if dry_run:
+            continue
+        keep = df.where(~F.col("conv_id").isin(conv_ids))
+        if not versioned:
+            tmp_dir = path + ".rewrite"
+            shutil.rmtree(tmp_dir, ignore_errors=True)
+            keep.write.mode("overwrite").parquet(tmp_dir)  # materialize FIRST
+            shutil.rmtree(path)
+            os.replace(tmp_dir, path)
+        elif keep.limit(1).count() == 0:
+            # every row of the bucket was deleted: emit a mapping
+            # REMOVAL ({bucket: null} in the snapshot delta) instead of
+            # pointing at a freshly written empty directory —
+            # read_incremental over only that location would fail
+            # schema inference (r7 ADVICE).
+            del data[str(b)]
+        else:
+            keep.write.mode("overwrite").parquet(
+                os.path.join(out_dir, "data", _data_loc(sid, b))
+            )
+            data[str(b)] = _data_loc(sid, b)
+    if deleted and not dry_run:
+        manifest.setdefault("deletions", []).append(
+            {"conv_ids": sorted(conv_ids), "rows_by_bucket": {str(k): v for k, v in deleted.items()}}
+        )
+        _write_manifest(out_dir, manifest, operation="delete")
+    return deleted
 
 
 def delete_conversations(
@@ -357,74 +447,26 @@ def delete_conversations(
     inventory; deletions are instead recorded in the manifest's
     ``deletions`` audit list.  Returns ``{bucket: n_deleted}``.
     """
-    manifest = read_manifest(out_dir)
-    n_buckets = manifest["n_buckets"]
-    if n_buckets is None:
-        raise ValueError(f"{out_dir} has no completed extraction manifest")
-    ids_df = spark.createDataFrame([(c,) for c in conv_ids], "conv_id string")
-    buckets = sorted(
-        r["b"]
-        for r in ids_df.select(bucket_col(n_buckets).alias("b")).distinct().collect()
-    )
-    deleted: dict[int, int] = {}
-    for b in buckets:
-        part_dir = os.path.join(out_dir, "extracted", f"bucket={b}")
-        if not os.path.isdir(part_dir):
-            continue
-        df = spark.read.parquet(part_dir)
-        n = df.where(F.col("conv_id").isin(conv_ids)).count()
-        if n == 0:
-            continue
-        deleted[b] = n
-        if dry_run:
-            continue
-        keep = df.where(~F.col("conv_id").isin(conv_ids))
-        tmp_dir = part_dir + ".rewrite"
-        shutil.rmtree(tmp_dir, ignore_errors=True)
-        keep.write.mode("overwrite").parquet(tmp_dir)  # materialize FIRST
-        shutil.rmtree(part_dir)
-        os.replace(tmp_dir, part_dir)
-    if deleted and not dry_run:
-        manifest.setdefault("deletions", []).append(
-            {"conv_ids": sorted(conv_ids), "rows_by_bucket": {str(k): v for k, v in deleted.items()}}
-        )
-        _write_manifest(out_dir, manifest, operation="delete")
-    return deleted
+    return _delete(spark, out_dir, conv_ids, dry_run, versioned=False)
 
 
 # -- Iceberg-style DATA time travel on plain parquet --------------------------
 #
-# The metadata layer above (numbered snapshots, delta history, as-of
-# reconstruction, rollback-as-new-commit) has always been the
-# parquet-manifest analog of Iceberg snapshots; what it could NOT do
-# without the real catalog was read an OLD file set, because the wave
-# writer and the deleter mutated bucket directories in place.  The
-# versioned layout below closes that at the semantics level using
-# Iceberg's actual mechanism — immutable data files + snapshot-scoped
-# location pointers — on plain parquet:
+# The versioned layout uses Iceberg's mechanism — immutable data files
+# plus snapshot-scoped location pointers — on plain parquet:
 #
 #   out/data/v=<sid>/bucket_pt=<K>/part-*.parquet   (never rewritten)
 #
 # Every commit that changes a bucket's data writes NEW directories
 # under the about-to-be-allocated snapshot id and repoints the
-# manifest's ``data_locations`` mapping; the snapshot history carries
-# the mapping as deltas, so ``read_snapshot(spark, out, sid)`` replays
-# to that snapshot's exact file set and reads it in ONE multi-path
-# parquet scan (column pruning / predicate pushdown intact).  Deletes
-# rewrite only affected buckets to new locations — prior snapshots
-# still see the deleted rows, exactly like Iceberg, and the hard-delete
-# story is :func:`expire_snapshots` (GC of exclusively-old file sets).
-# When the real Iceberg runtime is available these become catalog
-# operations with the same semantics; the layout is the documented
-# fallback, not a fork of the API.
-#
-# Reference analog: the workflow-keyed cache generations + S3 object
-# versioning the reference leans on for reprocessing
+# manifest's ``data_locations`` mapping, which the history carries as
+# deltas: ``read_snapshot(spark, out, sid)`` replays to that snapshot's
+# exact file set and reads it in ONE multi-path parquet scan.  Deletes
+# rewrite only affected buckets to new locations, so prior snapshots
+# still see the deleted rows until :func:`expire_snapshots` collects
+# them.  Reference analog: the workflow-keyed cache generations and S3
+# object versioning the reference leans on for reprocessing
 # (``classification/service.py:1627-1778``, ``delete_documents.py:286-420``).
-
-
-def _data_loc(sid: int, bucket: int) -> str:
-    return f"v={sid}/bucket_pt={bucket}"
 
 
 def run_versioned_extraction(
@@ -444,51 +486,23 @@ def run_versioned_extraction(
     that never landed is simply overwritten on retry (same sid is
     re-allocated) and is otherwise invisible — no snapshot references
     it — until :func:`expire_snapshots` garbage-collects it."""
-    os.makedirs(out_dir, exist_ok=True)
-    manifest = read_manifest(out_dir)
-    if manifest["n_buckets"] not in (None, n_buckets):
-        raise ValueError("n_buckets changed across resume")
-    if manifest.get("stream_batches"):
-        raise ValueError(
-            f"{out_dir} holds streaming snapshot commits; bucket waves "
-            "would mix layouts — use a separate output"
-        )
-    manifest["n_buckets"] = n_buckets
-    done = set(manifest["done_buckets"])
-    data = dict(manifest.get("data_locations", {}))
-    pending = [b for b in range(n_buckets) if b not in done]
+    return _run_waves(
+        spark, transcripts, out_dir, n_buckets, wave_size, fail_after_waves, salt,
+        versioned=True,
+    )
 
-    src = transcripts.withColumn("bucket", bucket_col(n_buckets))
-    waves = [pending[i : i + wave_size] for i in range(0, len(pending), wave_size)]
-    for wi, wave in enumerate(waves):
-        if fail_after_waves is not None and wi >= fail_after_waves:
-            raise RuntimeError("injected crash for resume test")
-        sid_next = int(manifest.get("snapshot_id", 0)) + 1
-        # bucket_pt drives the directory layout; bucket stays a REGULAR
-        # column inside the files so a multi-path snapshot read needs no
-        # partition-discovery basePath gymnastics.  A wave RE-RUN —
-        # rollback_to_snapshot + resume, or a crash before the manifest
-        # commit — replaces the wave's partitions of this sid's orphaned
-        # directory and its lineage partitions, so lineage rows are
-        # never duplicated (r7 ADVICE: reproduced growing 24 → 36 rows).
-        _write_wave(
-            spark, src, wave, out_dir,
-            os.path.join(out_dir, "data", f"v={sid_next}"), "bucket_pt", salt,
+
+def _read_locations(spark: SparkSession, out_dir: str, locations, what: str) -> DataFrame:
+    """One multi-path parquet scan of ``locations`` under ``data/``;
+    ``ValueError`` naming ``what`` when one of them is gone."""
+    paths = [os.path.join(out_dir, "data", loc) for loc in locations]
+    missing = [p for p in paths if not os.path.isdir(p)]
+    if missing:
+        raise ValueError(
+            f"{what}: {len(missing)} data location(s) missing "
+            f"(expired or corrupted), e.g. {missing[0]}"
         )
-        done.update(wave)
-        for b in wave:
-            # record only locations partitionBy actually created — a
-            # bucket with zero rows writes no directory, and a dangling
-            # pointer makes every later read_snapshot raise (r7 ADVICE:
-            # reproduced with 2 conversations / n_buckets=16).  An
-            # unmapped bucket reads as empty, which is exactly right.
-            if os.path.isdir(os.path.join(out_dir, "data", _data_loc(sid_next, b))):
-                data[str(b)] = _data_loc(sid_next, b)
-        manifest["done_buckets"] = sorted(done)
-        manifest["data_locations"] = data
-        _write_manifest(out_dir, manifest, operation=f"wave:{sorted(wave)}")
-        assert manifest["snapshot_id"] == sid_next  # single-writer invariant
-    return out_dir
+    return spark.read.parquet(*sorted(paths))
 
 
 def read_snapshot(
@@ -500,27 +514,15 @@ def read_snapshot(
     an unknown snapshot and ``ValueError`` for one whose data has been
     expired."""
     manifest = read_manifest(out_dir)
-    history = manifest.get("snapshots", [])
-    if snapshot_id is not None and snapshot_id in manifest.get(
-        "expired_snapshots", []
-    ):
-        raise ValueError(f"snapshot {snapshot_id} has been expired")
     if snapshot_id is None:
-        mapping = manifest.get("data_locations")
-        if mapping is None:
-            mapping = _replay_data(history)
+        mapping = manifest.get("data_locations", {})
+    elif snapshot_id in manifest.get("expired_snapshots", []):
+        raise ValueError(f"snapshot {snapshot_id} has been expired")
     else:
-        mapping = _replay_data(history, snapshot_id)
+        _, _, mapping = _as_of(out_dir, manifest.get("snapshots", []), snapshot_id)
     if not mapping:
         raise ValueError(f"{out_dir} has no versioned data snapshots")
-    paths = [os.path.join(out_dir, "data", loc) for loc in mapping.values()]
-    missing = [p for p in paths if not os.path.isdir(p)]
-    if missing:
-        raise ValueError(
-            f"snapshot {snapshot_id}: {len(missing)} data location(s) "
-            f"missing (expired or corrupted), e.g. {missing[0]}"
-        )
-    return spark.read.parquet(*sorted(paths))
+    return _read_locations(spark, out_dir, mapping.values(), f"snapshot {snapshot_id}")
 
 
 def delete_conversations_versioned(
@@ -536,59 +538,7 @@ def delete_conversations_versioned(
     delete until old snapshots are expired; for a hard delete (the
     reference's ``delete_documents.py`` compliance path) follow with
     ``expire_snapshots(out_dir, keep_from=<this commit's sid>)``."""
-    manifest = read_manifest(out_dir)
-    n_buckets = manifest["n_buckets"]
-    data = dict(manifest.get("data_locations", {}))
-    if manifest.get("stream_batches"):
-        raise ValueError(
-            f"{out_dir} holds stream-committed snapshots (no hash-bucket "
-            "targeting); filter-rewrite the batch locations instead"
-        )
-    if n_buckets is None or not data:
-        raise ValueError(f"{out_dir} has no versioned extraction manifest")
-    sid_next = int(manifest.get("snapshot_id", 0)) + 1
-    ids_df = spark.createDataFrame([(c,) for c in conv_ids], "conv_id string")
-    buckets = sorted(
-        r["b"]
-        for r in ids_df.select(bucket_col(n_buckets).alias("b")).distinct().collect()
-    )
-    deleted: dict[int, int] = {}
-    for b in buckets:
-        loc = data.get(str(b))
-        if loc is None:
-            continue
-        df = spark.read.parquet(os.path.join(out_dir, "data", loc))
-        n = df.where(F.col("conv_id").isin(conv_ids)).count()
-        if n == 0:
-            continue
-        deleted[b] = n
-        if dry_run:
-            continue
-        keep = df.where(~F.col("conv_id").isin(conv_ids))
-        if keep.limit(1).count() == 0:
-            # every row of the bucket was deleted: emit a mapping
-            # REMOVAL ({bucket: null} in the snapshot delta) instead of
-            # pointing at a freshly written empty directory —
-            # read_incremental over only that location would fail
-            # schema inference, and the mapping would keep a useless
-            # entry forever (r7 ADVICE).
-            data.pop(str(b), None)
-            continue
-        keep.write.mode("overwrite").parquet(
-            os.path.join(out_dir, "data", _data_loc(sid_next, b))
-        )
-        data[str(b)] = _data_loc(sid_next, b)
-    if deleted and not dry_run:
-        manifest["data_locations"] = data
-        manifest.setdefault("deletions", []).append(
-            {
-                "conv_ids": sorted(conv_ids),
-                "rows_by_bucket": {str(k): v for k, v in deleted.items()},
-            }
-        )
-        _write_manifest(out_dir, manifest, operation="delete")
-        assert manifest["snapshot_id"] == sid_next
-    return deleted
+    return _delete(spark, out_dir, conv_ids, dry_run, versioned=True)
 
 
 def expire_snapshots(out_dir: str, keep_from: int) -> dict:
@@ -601,16 +551,14 @@ def expire_snapshots(out_dir: str, keep_from: int) -> dict:
     expire-snapshots contract.  Returns ``{"expired": [...ids],
     "removed_locations": [...]}``."""
     manifest = read_manifest(out_dir)
-    history = manifest.get("snapshots", [])
-    all_ids = [s["snapshot_id"] for s in history]
     expired_prior = set(manifest.get("expired_snapshots", []))
-    to_expire = [
-        sid for sid in all_ids if sid < keep_from and sid not in expired_prior
-    ]
-    kept_ids = [sid for sid in all_ids if sid >= keep_from]
+    to_expire = []
     referenced: set = set(manifest.get("data_locations", {}).values())
-    for sid in kept_ids:
-        referenced.update(_replay_data(history, sid).values())
+    for snap, _, data in _replay(manifest.get("snapshots", [])):
+        if snap["snapshot_id"] >= keep_from:
+            referenced.update(data.values())
+        elif snap["snapshot_id"] not in expired_prior:
+            to_expire.append(snap["snapshot_id"])
     data_root = os.path.join(out_dir, "data")
     removed: list[str] = []
     if os.path.isdir(data_root):
@@ -649,29 +597,24 @@ def compact_snapshot(
     bytes, not to commit history.  Returns ``{bucket: (files_before,
     files_after)}`` for the buckets actually rewritten."""
     manifest = read_manifest(out_dir)
-    data = dict(manifest.get("data_locations", {}))
+    data = manifest.get("data_locations", {})
     if not data:
         raise ValueError(f"{out_dir} has no versioned extraction manifest")
-    sid_next = int(manifest.get("snapshot_id", 0)) + 1
-    target_bytes = target_file_mb * 1024 * 1024
+    sid = int(manifest.get("snapshot_id", 0)) + 1
     changed: dict = {}
     for b, loc in sorted(data.items()):
-        path = os.path.join(out_dir, "data", loc)
-        files = [f for f in os.listdir(path) if f.endswith(".parquet")]
-        total = sum(os.path.getsize(os.path.join(path, f)) for f in files)
-        n_target = max(1, -(-total // target_bytes))  # ceil div
-        if n_target >= len(files):
-            continue
-        new_loc = f"v={sid_next}/bucket_pt={b}"  # key is opaque (bucket or batch)
-        spark.read.parquet(path).coalesce(int(n_target)).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out_dir, "data", new_loc))
-        data[b] = new_loc
-        changed[b] = (len(files), int(n_target))
+        new_loc = _data_loc(sid, b)  # key is opaque (bucket or batch)
+        before, _, after = coalesce_rewrite(
+            spark,
+            os.path.join(out_dir, "data", loc),
+            os.path.join(out_dir, "data", new_loc),
+            target_file_mb * 1024 * 1024,
+        )
+        if after < before:
+            data[b] = new_loc
+            changed[b] = (before, after)
     if changed:
-        manifest["data_locations"] = data
         _write_manifest(out_dir, manifest, operation="compact")
-        assert manifest["snapshot_id"] == sid_next
     return changed
 
 
@@ -687,40 +630,27 @@ def read_incremental(
     the change unit — same semantics as Iceberg's changelog at
     file granularity).  Raises ``KeyError`` for unknown snapshot ids;
     returns an empty frame when nothing changed in the range."""
-    manifest = read_manifest(out_dir)
-    history = manifest.get("snapshots", [])
-    known = {s["snapshot_id"] for s in history}
-    upto = (
-        max(known) if upto_snapshot_id is None else upto_snapshot_id
-    )
+    history = read_manifest(out_dir).get("snapshots", [])
+    known = [s["snapshot_id"] for s in history]
+    upto = known[-1] if upto_snapshot_id is None and known else upto_snapshot_id
     for sid in (since_snapshot_id, upto):
         if sid not in known:
             raise KeyError(f"no snapshot {sid} in {out_dir}")
-    changed: dict = {}
-    for snap in history:
-        if since_snapshot_id < snap["snapshot_id"] <= upto:
-            for b, loc in snap.get("data", {}).items():
-                if loc is None:
-                    changed.pop(b, None)
-                else:
-                    changed[b] = loc
-    # a location superseded WITHIN the range collapses to its latest —
-    # but only locations still current AS OF `upto` are readable state
-    as_of = _replay_data(history, upto)
-    paths = [
-        os.path.join(out_dir, "data", loc)
-        for b, loc in changed.items()
-        if as_of.get(b) == loc
-    ]
-    if not paths:
+    touched: set = set()
+    for snap, _, data in _replay(history):
+        if snap["snapshot_id"] > since_snapshot_id:
+            touched.update(snap.get("data", ()))
+        if snap["snapshot_id"] == upto:
+            break
+    # a bucket changed in the range surfaces as its file set as of `upto`;
+    # one the range removed is gone
+    locations = [loc for b, loc in data.items() if b in touched]
+    if not locations:
         return read_snapshot(spark, out_dir, upto).limit(0)
-    missing = [p for p in paths if not os.path.isdir(p)]
-    if missing:
-        raise ValueError(
-            f"incremental range ({since_snapshot_id}, {upto}]: "
-            f"{len(missing)} changed location(s) expired, e.g. {missing[0]}"
-        )
-    return spark.read.parquet(*sorted(paths))
+    return _read_locations(
+        spark, out_dir, locations,
+        f"incremental range ({since_snapshot_id}, {upto}]",
+    )
 
 
 def versioned_stream_sink(out_dir: str, salt: int = 8):

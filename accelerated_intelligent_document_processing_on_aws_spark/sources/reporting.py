@@ -192,6 +192,34 @@ def overwrite_date_partitions(df: DataFrame, path: str, ts_col: str = "ts") -> N
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
+def coalesce_rewrite(
+    spark: SparkSession,
+    path: str,
+    dest: str,
+    target_bytes: int,
+    min_files: int = 2,
+) -> tuple[int, int, int]:
+    """Rewrite the parquet files directly under ``path`` into
+    ``ceil(total_bytes / target_bytes)`` files at ``dest`` via
+    ``coalesce`` (no shuffle — coalesce only merges read splits).
+    Nothing is written when ``path`` holds fewer than ``min_files``
+    files (bytes are then not summed and read 0) or when the rewrite
+    would not reduce the file count.  Returns ``(files_before, bytes,
+    files_after)``; ``files_after == files_before`` when nothing was
+    written."""
+    files = [
+        os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")
+    ]
+    if len(files) < min_files:
+        return len(files), 0, len(files)
+    total = sum(os.path.getsize(f) for f in files)
+    n_out = max(1, -(-total // target_bytes))  # ceil div
+    if n_out >= len(files):
+        return len(files), total, len(files)
+    spark.read.parquet(path).coalesce(n_out).write.mode("overwrite").parquet(dest)
+    return len(files), total, n_out
+
+
 def compact_parquet_dir(
     spark: SparkSession,
     path: str,
@@ -201,37 +229,26 @@ def compact_parquet_dir(
     """Small-file compaction — the table-maintenance op that keeps scan
     parallelism healthy at warehouse scale (a 100 TB table fed by
     incremental jobs accretes millions of KB-sized files; open/footer
-    overhead then dominates scans).  Rewrites the directory into
-    ``ceil(total_bytes / target_bytes)`` files via ``coalesce`` (no
-    shuffle — coalesce only merges read splits), staging to a temp dir
-    and swapping so a crash mid-compact leaves the original intact.
+    overhead then dominates scans).  Rewrites the directory with
+    :func:`coalesce_rewrite`, staging to a temp dir and swapping so a
+    crash mid-compact leaves the original intact.
 
     Returns ``{files_before, files_after, bytes}``.  On Iceberg
     deployments prefer the catalog's ``rewrite_data_files`` action
     (snapshot-safe, concurrent-writer-safe) — this is the plain-parquet
     fallback, safe only without concurrent writers (documented)."""
-    import math
     import shutil
 
-    files = [
-        os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")
-    ]
-    if len(files) < min_files:
-        return {"files_before": len(files), "files_after": len(files), "bytes": 0}
-    total = sum(os.path.getsize(f) for f in files)
-    n_out = max(1, math.ceil(total / target_bytes))
-    if n_out >= len(files):
-        return {"files_before": len(files), "files_after": len(files), "bytes": total}
     tmp = path.rstrip("/") + "._compact_tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    spark.read.parquet(path).coalesce(n_out).write.mode("overwrite").parquet(tmp)
-    old = path.rstrip("/") + "._compact_old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    after = len([f for f in os.listdir(path) if f.endswith(".parquet")])
-    return {"files_before": len(files), "files_after": after, "bytes": total}
+    before, total, after = coalesce_rewrite(spark, path, tmp, target_bytes, min_files)
+    if after < before:
+        old = path.rstrip("/") + "._compact_old"
+        shutil.rmtree(old, ignore_errors=True)
+        os.rename(path, old)
+        os.rename(tmp, path)
+        shutil.rmtree(old)
+        after = len([f for f in os.listdir(path) if f.endswith(".parquet")])
+    return {"files_before": before, "files_after": after, "bytes": total}
 
 
 def write_sorted_export(

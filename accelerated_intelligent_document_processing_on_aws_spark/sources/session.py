@@ -13,8 +13,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = 32
-
 
 def driver_memory() -> str:
     """``SPARK_DRIVER_MEMORY`` if set, else half of physical memory and at
@@ -32,11 +30,12 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """The engine's session.  ``master`` defaults to ``local[N]`` with N
+    the cores this process may run on (``SPARK_GRAFT_CPUS`` overrides),
+    ``shuffle_partitions`` to ``max(N, 16)``."""
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("SPARK_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
-    )
+    shuffle_partitions = shuffle_partitions or max(cpus, 16)
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)

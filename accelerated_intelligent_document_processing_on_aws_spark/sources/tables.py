@@ -3,9 +3,9 @@
 The driver's TPC-H-ish fixtures live one-parquet-per-table under an
 ``sf_dir``; transcript corpora are single parquet files produced by
 ``fixtures.transcripts``.  In production these reads become Iceberg
-table scans (``spark.read.format("iceberg").load(...)``) — the format
-is a config switch, not an architecture change; Catalyst pushes filters
-and prunes columns/partitions identically for both.
+table scans (``spark.read.format("iceberg").load(...)``) — a change of
+read format, not of architecture; Catalyst pushes filters and prunes
+columns/partitions identically for both.
 """
 
 from __future__ import annotations

@@ -2,7 +2,8 @@
 """Benchmark harness.
 
 Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and the transcript
+/root/testdata/sf0.1) on ``get_spark``'s default ``local[N]`` (N = the
+process's cores, or ``$SPARK_GRAFT_CPUS``) and the transcript
 extraction throughput benchmark, then prints ONE JSON line:
 
   {"metric": "turns_extracted_per_sec", "value": <turns/sec>,
@@ -26,7 +27,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 BENCH_CONVS = int(os.environ.get("SPARK_GRAFT_BENCH_CONVS", "20000"))
 CACHE_DIR = os.environ.get("SPARK_GRAFT_BENCH_CACHE", "/tmp/spark_graft_bench")
 
@@ -181,13 +181,9 @@ def main() -> None:
     if os.path.isdir("/dev/shm"):
         # keep the salted repartition shuffle off the disk
         extra["spark.local.dir"] = "/dev/shm/spark-local"
-    spark = get_spark(
-        app_name="idp-spark-bench",
-        master=f"local[{CPUS}]",
-        shuffle_partitions=max(CPUS, 16),
-        extra_conf=extra,
-    )
+    spark = get_spark(app_name="idp-spark-bench", extra_conf=extra)
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
 
     # -- transcript extraction throughput (the BASELINE.json metric) -----
     transcripts = spark.read.parquet(corpus_path)
@@ -196,14 +192,14 @@ def main() -> None:
     # one-time costs, not engine throughput), then time the full corpus
     # min-of-2 — same steady-state policy as the per-query timings (this
     # VM shows ±4× hypervisor steal-noise on multi-second measurements)
-    extract_turns(transcripts.limit(20_000), num_partitions=CPUS, salt=16).count()
+    extract_turns(transcripts.limit(20_000), num_partitions=cpus, salt=16).count()
     extract_sec = float("inf")
     # min-of-3: this VM's host-side slowdowns are invisible to the guest
     # (/proc/stat steal reads 0 while identical runs spread 13.7-20.2s);
     # a third sample materially tightens the headline metric
     for _ in range(3):
         t0 = time.perf_counter()
-        extracted = extract_turns(transcripts, num_partitions=CPUS * 3, salt=16)
+        extracted = extract_turns(transcripts, num_partitions=cpus * 3, salt=16)
         out_rows = extracted.count()
         extract_sec = min(extract_sec, time.perf_counter() - t0)
         assert out_rows == n_turns, (out_rows, n_turns)
@@ -228,7 +224,7 @@ def main() -> None:
     for _ in range(3):
         t0 = time.perf_counter()
         out_rows = extract_turns_skew_aware(
-            transcripts, num_partitions=CPUS, heavy_turns=200
+            transcripts, num_partitions=cpus, heavy_turns=200
         ).count()
         skew_sec = min(skew_sec, time.perf_counter() - t0)
         assert out_rows == n_turns
@@ -289,7 +285,7 @@ def main() -> None:
                 "extract_sec_skew_aware": round(skew_sec, 3),
                 "turns_per_sec_skew_aware": round(n_turns / skew_sec, 1),
                 "curation_chain": chain,
-                "cpus": CPUS,
+                "cpus": cpus,
             }
         )
     )

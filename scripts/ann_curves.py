@@ -46,11 +46,8 @@ def main() -> None:
         if structured
         else (sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1")
     )
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark(
         app_name="ann-curves",
-        master=f"local[{cpus}]",
-        shuffle_partitions=max(cpus, 16),
         extra_conf={"spark.sql.files.maxPartitionBytes": str(16 * 1024 * 1024)},
     )
     spark.sparkContext.setLogLevel("ERROR")

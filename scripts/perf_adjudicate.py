@@ -37,7 +37,6 @@ sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 WARM_DIR = "/root/testdata/sf0.001"
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 ROUNDS = int(os.environ.get("ADJUDICATE_ROUNDS", "6"))
 PASSES = 2  # timed passes per query per subprocess visit
 
@@ -77,12 +76,7 @@ def worker(codec: str) -> None:
         extra["spark.io.compression.codec"] = codec
     if os.path.isdir("/dev/shm"):
         extra["spark.local.dir"] = "/dev/shm/spark-local"
-    spark = get_spark(
-        app_name=f"adjudicate-{codec}",
-        master=f"local[{CPUS}]",
-        shuffle_partitions=max(CPUS, 16),
-        extra_conf=extra,
-    )
+    spark = get_spark(app_name=f"adjudicate-{codec}", extra_conf=extra)
     spark.sparkContext.setLogLevel("ERROR")
     for name in QUERIES_UNDER_TEST:  # python-worker/codegen warmup
         QUERIES[name](spark, WARM_DIR).count()

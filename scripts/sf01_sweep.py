@@ -13,13 +13,16 @@ Usage: python scripts/sf01_sweep.py [sf_dir] [only]
   only    optional comma-separated query names — round-5 verdict item
           6 sweeps the ~20 heaviest oracle pairs at sf1 rather than
           all 130
-Prints one PASS/FAIL line per query (with spark/oracle wall seconds)
-plus a summary JSON line.  ``SWEEP_ORACLE_TIMEOUT`` (seconds, default
-600) arms a watchdog that ``con.interrupt()``s a runaway DuckDB oracle
-— at sf1 the key-shifted replication turns every document into a
-10-clique of exact near-dups, and a recursive-closure oracle that is
-seconds at sf0.1 can go super-linear; a timed-out oracle is reported
-as ORACLE_TIMEOUT (an oracle-cost fact, not a Spark-correctness fail).
+Prints one PASS/FAIL line per oracle-paired query (with spark/oracle
+wall seconds), then one ``ROWS <name> <count> <seconds>`` line per
+registry entry without an oracle twin (the rows-only entries: run, not
+compared), plus a summary JSON line.  ``SWEEP_ORACLE_TIMEOUT``
+(seconds, default 600) arms a watchdog that ``con.interrupt()``s a
+runaway DuckDB oracle — at sf1 the key-shifted replication turns every
+document into a 10-clique of exact near-dups, and a recursive-closure
+oracle that is seconds at sf0.1 can go super-linear; a timed-out oracle
+is reported as ORACLE_TIMEOUT (an oracle-cost fact, not a
+Spark-correctness fail).
 """
 
 from __future__ import annotations
@@ -69,11 +72,8 @@ def main() -> None:
     )
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark(
         app_name="sf01-sweep",
-        master=f"local[{cpus}]",
-        shuffle_partitions=max(cpus, 16),
         extra_conf={"spark.sql.files.maxPartitionBytes": str(16 * 1024 * 1024)},
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -87,12 +87,14 @@ def main() -> None:
 
     con = _fresh_con()
     queries, oracles = entrymod.queries(), entrymod.oracle_sql()
+    names = set(queries)
     if len(sys.argv) > 2:
-        only = {n.strip() for n in sys.argv[2].split(",") if n.strip()}
-        unknown = only - set(oracles)
+        names = {n.strip() for n in sys.argv[2].split(",") if n.strip()}
+        unknown = names - set(queries)
         if unknown:
-            raise SystemExit(f"unknown/unpaired queries: {sorted(unknown)}")
-        oracles = {n: oracles[n] for n in only}
+            raise SystemExit(f"unknown queries: {sorted(unknown)}")
+    oracles = {n: sql for n, sql in oracles.items() if n in names}
+    rows_only = sorted(names - set(oracles))
     oracle_timeout = float(os.environ.get("SWEEP_ORACLE_TIMEOUT", "600"))
     failed, timed_out, passed = [], [], 0
     t_start = time.time()
@@ -163,11 +165,20 @@ def main() -> None:
                 f"PASS {name} (spark {t_spark:.1f}s, oracle {t_oracle:.1f}s)",
                 flush=True,
             )
+    for name in rows_only:  # no oracle twin: run it, report its row count
+        try:
+            t0 = time.time()
+            n = queries[name](spark, sf_dir).count()
+            print(f"ROWS {name} {n} {time.time() - t0:.1f}", flush=True)
+        except Exception as e:  # noqa: BLE001
+            failed.append((name, f"ERROR {type(e).__name__}: {e}"))
+            print(f"FAIL {name}: {failed[-1][1][:300]}", flush=True)
     print(
         json.dumps(
             {
                 "sf_dir": sf_dir,
                 "oracle_paired": len(oracles),
+                "rows_only": len(rows_only),
                 "passed": passed,
                 "failed": [n for n, _ in failed],
                 "oracle_timeout": timed_out,

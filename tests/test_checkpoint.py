@@ -123,9 +123,9 @@ class TestResume:
         removed), not the full done_buckets list — manifest bytes stay
         O(total churn) over a long many-wave run, not
         O(waves × n_buckets) (ADVICE r5).  Legacy full-state entries
-        still replay (back-compat path in _replay_state)."""
+        still replay (back-compat path in _replay)."""
         from accelerated_intelligent_document_processing_on_aws_spark.sources.checkpoint import (
-            _replay_state,
+            _replay,
             manifest_as_of,
         )
 
@@ -148,8 +148,9 @@ class TestResume:
             {"snapshot_id": 2, "operation": "wave", "done_buckets": [0, 1, 2, 3]},
             {"snapshot_id": 3, "operation": "rollback_to_1", "done_buckets": [0, 1]},
         ]
-        assert _replay_state(legacy, 2) == {0, 1, 2, 3}
-        assert _replay_state(legacy, 3) == {0, 1}
+        done = {snap["snapshot_id"]: set(d) for snap, d, _ in _replay(legacy)}
+        assert done[2] == {0, 1, 2, 3}
+        assert done[3] == {0, 1}
 
     def test_rollback_crossing_delete_refused_then_replayed(
         self, spark, small_corpus, tmp_path_factory

@@ -4,6 +4,9 @@ A definition counts as used when its name appears somewhere other than
 inside its own body: as a Name, an Attribute, an import alias or a
 string holding the bare identifier, in the package, the tests,
 ``scripts/``, ``perfbench/``, ``bench.py`` or ``__spark_entry__.py``.
+An Attribute on a name imported from outside the package (``pq``,
+``np``, ``F``, ``os``) is not a use: ``pq.write_table`` does not call
+the package's own ``write_table``.
 Re-exports in a package ``__init__.py`` are not uses.  Functions
 registered with the query decorator ``@q`` are exempt: the registry
 reaches them by name.  Pure ``ast`` — no Spark session.
@@ -26,13 +29,35 @@ def _scanned_files():
     yield ROOT / "__spark_entry__.py"
 
 
+def _external_names(tree):
+    """Names ``tree`` binds by importing a module outside the package."""
+    names = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            mods = [(a.name, a.asname or a.name.split(".")[0]) for a in node.names]
+        elif isinstance(node, ast.ImportFrom) and not node.level:
+            mods = [(node.module, a.asname or a.name) for a in node.names]
+        else:
+            continue
+        names.update(bound for mod, bound in mods if not mod.startswith(PKG.name))
+    return names
+
+
+def _root_name(node):
+    while isinstance(node, ast.Attribute):
+        node = node.value
+    return node.id if isinstance(node, ast.Name) else None
+
+
 def _references(tree, is_init):
     """(name, line) for every reference-like node in ``tree``."""
+    external = _external_names(tree)
     for node in ast.walk(tree):
         if isinstance(node, ast.Name):
             yield node.id, node.lineno
         elif isinstance(node, ast.Attribute):
-            yield node.attr, node.lineno
+            if _root_name(node) not in external:
+                yield node.attr, node.lineno
         elif isinstance(node, ast.alias) and not is_init:
             yield node.name, node.lineno
         elif isinstance(node, ast.Constant) and isinstance(node.value, str):

@@ -166,3 +166,14 @@ def test_semantic_cosine_eval_single_embedding_evaluation(spark):
         f"embedding tree duplicated: md5 appears {optimized.count('md5')}x "
         "in the optimized plan (expected 6 — one evaluation per side)"
     )
+
+
+@pytest.mark.parametrize("name", ["stickler_config_eval", "eval_rollup_docs"])
+def test_evaluation_cascade_scans_orders_once(spark, name):
+    """The attribute evaluation explodes one array of attribute structs
+    per ``orders`` row: one file scan and no Union, where a union of
+    per-attribute selects would scan ``orders`` once per attribute.
+    Builds the plan only; no action runs."""
+    plan = QUERIES[name](spark, SF)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan") == 1, plan
+    assert "Union" not in plan, plan

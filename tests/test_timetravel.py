@@ -243,6 +243,69 @@ class TestVersionedLayout:
             read_incremental(spark, out, since_snapshot_id=77)
 
 
+    def test_incremental_range_across_rollback(self, spark, corpus, tmp_path_factory):
+        """A bucket that a delete moved and a rollback moved back counts
+        as changed in any range holding either commit, and surfaces as
+        its file set as of the range's end."""
+        from accelerated_intelligent_document_processing_on_aws_spark.sources.checkpoint import (
+            read_incremental,
+        )
+
+        src = spark.read.parquet(corpus)
+        out = str(tmp_path_factory.mktemp("tt") / "run")
+        run_versioned_extraction(spark, src, out, n_buckets=4, wave_size=2, salt=4)
+        victim = src.select("conv_id").first()["conv_id"]
+        delete_conversations_versioned(spark, out, [victim])  # snapshot 3
+        rollback_to_snapshot(out, 2, allow_undelete=True)  # snapshot 4
+        m = read_manifest(out)
+        assert [s["operation"] for s in m["snapshots"][2:]] == ["delete", "rollback_to_2"]
+        (b,) = (int(k) for k in m["snapshots"][2]["data"])
+
+        def bucket_rows(df):
+            return _rows(df.where(df.bucket == b))
+
+        restored = bucket_rows(read_snapshot(spark, out, 2))
+        rewritten = bucket_rows(read_snapshot(spark, out, 3))
+        assert any(t[0] == victim for t in restored)
+        assert not any(t[0] == victim for t in rewritten)
+        assert _rows(read_incremental(spark, out, 2, 4)) == restored
+        assert _rows(read_incremental(spark, out, 3, 4)) == restored
+        assert _rows(read_incremental(spark, out, 2, 3)) == rewritten
+        # (1, 4] holds wave 2 too: its buckets plus the one moved and back
+        touched = set(m["snapshots"][1]["added"]) | {b}
+        latest = read_snapshot(spark, out, 4)
+        assert _rows(read_incremental(spark, out, 1, 4)) == _rows(
+            latest.where(latest.bucket.isin(sorted(touched)))
+        )
+
+    def test_expire_keeps_every_location_a_kept_snapshot_reads(
+        self, spark, corpus, tmp_path_factory
+    ):
+        """Three kept snapshots point one bucket at three locations;
+        expiring below the first of them collects only the location no
+        kept snapshot reads."""
+        src = spark.read.parquet(corpus)
+        out = str(tmp_path_factory.mktemp("tt") / "run")
+        run_versioned_extraction(spark, src, out, n_buckets=2, wave_size=2, salt=4)
+        full = read_snapshot(spark, out, 1)
+        convs = sorted(
+            r["conv_id"] for r in full.where(full.bucket == 0).select("conv_id").distinct().collect()
+        )
+        counts = [full.count()]
+        for victim in convs[:3]:  # snapshots 2, 3 and 4
+            delete_conversations_versioned(spark, out, [victim])
+            counts.append(read_snapshot(spark, out).count())
+        m = read_manifest(out)
+        assert [s["data"] for s in m["snapshots"][1:]] == [
+            {"0": f"v={sid}/bucket_pt=0"} for sid in (2, 3, 4)
+        ]
+        res = expire_snapshots(out, keep_from=2)
+        assert res == {"expired": [1], "removed_locations": ["v=1/bucket_pt=0"]}
+        for sid in (2, 3, 4):
+            assert read_snapshot(spark, out, sid).count() == counts[sid - 1]
+        assert counts[0] > counts[1] > counts[2] > counts[3]
+
+
 class TestVersionedStreamSink:
     def test_stream_commits_snapshots_exactly_once(
         self, spark, corpus, tmp_path_factory
