@@ -416,34 +416,27 @@ def minhash_lsh_pairs(
         # costs one codegen predicate (run exact dedup first regardless)
         .where(F.col("id_a") != F.col("id_b"))
         .distinct()
-        # the pair set is referenced three times below (verify join +
-        # twice through cand_ids); it is tiny (collision candidates
-        # only), so truncate lineage here and bound the signature
-        # pipeline to one evaluation.  The call runs the bucket and
-        # distinct exchanges (the signature kernel with them); the
-        # blocks stay in executor storage until the session ends.
-        .localCheckpoint(eager=False)
     )
-    # exact-Jaccard verify over CANDIDATE ids only.  Both the broadcast
-    # and the checkpoint below are load-bearing at scale (r7 drill,
-    # 2.6M turns): without them the LeftSemi sort-merge-joins and
-    # re-evaluates the shingle subtree per verify side — the full text
-    # column crossed the wire TWICE (2×2.8 GB of the leg's 7 GB
-    # shuffle) and the leg measured 1004-1117 s.  Broadcasting the
-    # (small, candidates-only) id set turns the semi-join into a
-    # broadcast hash join — the corpus text never shuffles — and the
-    # localCheckpoint evaluates the candidate shingle sets ONCE (their
-    # storage is O(candidates × shingle bytes), bounded by the LSH
-    # collision count, not the corpus).  The call runs the cand_ids
-    # exchanges; the blocks stay in executor storage until the session
-    # ends.
+    # exact-Jaccard verify over CANDIDATE ids only.  The pair set is
+    # referenced three times (the verify join and twice through
+    # cand_ids) and the shingle frame twice (both verify sides); each
+    # is evaluated once, because the repeated references read the
+    # distinct's shuffle and sh's repartition as a ReusedExchange
+    # (pinned by tests/test_plan_hygiene.py).  The repartition by id
+    # is that shared exchange: both verify joins' sides are already
+    # partitioned by it.  Without it the bench.py chain corpus
+    # (~500k turns, 4 cores) shingled and scanned the candidates per
+    # verify side: 346 s against 230 s with it.  The broadcast is
+    # load-bearing at scale (r7 drill, 2.6M turns): without it the
+    # LeftSemi sort-merge-joins, the full text column crossed the wire
+    # twice and the leg measured 1004-1117 s.
     cand_ids = (
         cand.select(F.explode(F.array("id_a", "id_b")).alias("id")).distinct()
     )
     sh = (
         base.join(F.broadcast(cand_ids), "id", "left_semi")
         .select("id", shingles(tokens("txt"), shingle_n).alias("sh"))
-        .localCheckpoint(eager=False)
+        .repartition("id")
     )
     verified = (
         cand.join(sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
@@ -553,13 +546,7 @@ def simhash_pairs(
     so a task does at most 256² hamming evaluations per key however
     degenerate the bucket.  The O(n²) candidate volume of a truly
     degenerate bucket is inherent to the semantics (those pairs exist);
-    run exact dedup first if byte-identical floods are expected.
-
-    The fingerprint/bucket frame is referenced by both join sides and is
-    ``localCheckpoint(eager=False)``-ed.  That is not lazy under AQE:
-    the call runs the bucket window's exchange, and the fingerprint UDF
-    with it, while the plan is being built.  Its blocks stay in executor
-    storage until the session ends (nothing unpersists them)."""
+    run exact dedup first if byte-identical floods are expected."""
     if max_hamming < 0:
         raise ValueError("max_hamming must be >= 0")
     n_chunks = max_hamming + 1
@@ -638,12 +625,9 @@ def simhash_pairs(
     sized = sized.withColumn(
         "_ns", F.ceil(F.col("_bs") / F.lit(salt_target)).cast("int")
     )
-    # referenced twice (both join sides) — without materialization
-    # Catalyst re-evaluates the scan + fingerprint UDF + window per
-    # reference.  The local checkpoint computes it once and serves both
-    # references from executor storage; the call runs the window's
-    # exchange (and the fingerprint UDF) here, at plan-build time.
-    sized = sized.localCheckpoint(eager=False)
+    # both join sides read ``sized``; the fingerprint UDF runs once,
+    # because the second side reads the window's shuffle as a
+    # ReusedExchange (pinned by tests/test_plan_hygiene.py)
     grp = F.pmod(F.xxhash64(F.col("id")), F.col("_ns")).cast("int")
     fan = F.explode(F.sequence(F.lit(0), F.col("_ns") - 1))
     left = sized.select(
@@ -1247,7 +1231,6 @@ def bloom_incremental_dedup(
     ref: DataFrame,
     bitmap: bytes,
     key_col: str = "content_hash",
-    materialize: bool = True,
 ) -> DataFrame:
     """Incremental-ingestion exact dedup with Bloom pre-pruning:
     return the ``incoming`` rows whose ``key_col`` does NOT appear in
@@ -1272,15 +1255,19 @@ def bloom_incremental_dedup(
     as the checkpoint anti-join's (``sources/checkpoint.py``)
     membership-accelerated form.
 
-    ``materialize=True`` (default) localCheckpoints the probed frame
-    (``eager=False``; the call still runs any exchange in
-    ``incoming``'s plan, and the blocks stay in executor storage until
-    the session ends) so the two consumers (novel fast path, verify
-    join) share ONE scan+probe evaluation — the same single-evaluation
-    defense as the repaired LSH carry=False leg (a filter on a
-    pandas-UDF output column otherwise re-plans the UDF per branch: two
-    ArrowEvalPython nodes, two input scans).  Set it False only when the
-    input is itself a cheap in-memory frame."""
+    The probed frame is ``localCheckpoint(eager=False)``-ed, so the two
+    consumers (novel fast path, verify join) share ONE scan+probe
+    evaluation.  No exchange sits under the probe UDF, so Spark's
+    exchange reuse cannot share it: without the checkpoint the plan
+    scans ``incoming`` twice and evaluates the UDF three times (once
+    per branch filter and once for the projection).  That measured
+    +30% on the registry's ``bloom_incremental_dedup_docs`` at sf0.1
+    (medians 0.953 → 1.242 s, 0 of 5 interleaved pairs faster; 4
+    cores).  A single left-anti join conditioned on ``_maybe``
+    evaluates the UDF once, but shuffles every incoming row whenever
+    the reference keys are too large to broadcast, the regime this
+    operator is for.  The call starts no job while the plan is built;
+    its blocks stay in executor storage until the session ends."""
     import numpy as np
 
     k = int(np.frombuffer(bitmap[:8], dtype=np.uint64)[0])
@@ -1313,9 +1300,8 @@ def bloom_incremental_dedup(
             F.xxhash64(F.col(key_col), F.lit(0x9E3779B9)),
         ),
     )
-    if materialize:
-        # blocks stay in executor storage until the session ends
-        probed = probed.localCheckpoint(eager=False)
+    # kept: see the docstring for the A/B against its removal
+    probed = probed.localCheckpoint(eager=False)
     novel_fast = probed.where(~F.col("_maybe")).drop("_maybe")
     survivors = (
         probed.where(F.col("_maybe"))

@@ -226,8 +226,10 @@ def extract_turns(
 
     ``salt=0`` skips the repartition entirely and runs the kernel
     straight on the SCAN partitions — zero shuffle, so the text bytes
-    never leave their scan task.  Measured ~1.5× faster at sf0.1
-    (the salted exchange moves the whole text column).  Use it when the
+    never leave their scan task.  It measured ~1.5× faster at sf0.1 on
+    32 cores, but on a 4-core host a checkpointed wave without the
+    shuffle was not faster (1.644 s against 1.561 s salted, medians of
+    7-8 alternating runs of 16 buckets in one process).  Use it when the
     input layout is already row-balanced (byte-split parquet/Iceberg
     scans are, regardless of conversation skew); keep the default
     salted repartition when the input is conv-clustered (one file per
@@ -289,19 +291,14 @@ def extract_turns_skew_aware(
     by tests/test_pipeline_spark.py's skew-aware equivalence test.
     """
     df = transcripts.select(*KERNEL_COLUMNS)
-    # localCheckpoint: the conv_id-count subtree is referenced by BOTH
-    # branches — without it the plan evaluates the counting aggregate
-    # twice (the multiply-referenced-subtree trap from the
-    # minhash/simhash plans, NOTES round 3).  eager=False is not lazy
-    # here: the call runs the aggregate's exchange (a scan of the
-    # input), and the blocks stay in executor storage until the session
-    # ends.
+    # both branches read the heavy-id set; the aggregate runs once,
+    # because the second branch's broadcast is a ReusedExchange of the
+    # first's (pinned by tests/test_plan_hygiene.py)
     heavy_ids = F.broadcast(
         df.groupBy("conv_id")
         .agg(F.count(F.lit(1)).alias("_n"))
         .where(F.col("_n") > heavy_turns)
         .select("conv_id")
-        .localCheckpoint(eager=False)
     )
     light = df.join(heavy_ids, "conv_id", "left_anti")
     heavy = df.join(heavy_ids, "conv_id", "left_semi")

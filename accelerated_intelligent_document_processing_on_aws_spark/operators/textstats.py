@@ -369,14 +369,7 @@ def unigram_logppl(
     no row (both engines drop them in the inner join).  Reference
     analog: the assessment stage's per-document confidence scoring
     (``assessment/service.py``) re-expressed as a corpus-statistics
-    quality signal.
-
-    The per-(doc, token) fold is ``localCheckpoint(eager=False)``-ed.
-    That is not lazy under AQE: the call runs the fold's exchanges
-    while the plan is being built.  Its blocks stay in executor storage
-    until the session ends (nothing unpersists them)."""
-    from ..sources.tables import spread_scan
-
+    quality signal."""
     # round 8 (the bigram prefold pattern, applied here first): fold
     # occurrences to per-(doc, token) MULTIPLICITY before anything
     # joins or re-aggregates — the fold's groupBy gets map-side
@@ -385,14 +378,12 @@ def unigram_logppl(
     # per-doc-distinct rows instead of occurrences (2.7M → 1.16M at
     # sf1; repetitive docs — the ones the score exists to catch — are
     # exactly the ones that blow up the occurrence-sized form).  The
-    # folded frame feeds both the vocabulary and the scoring join, so
-    # it is localCheckpointed — otherwise Catalyst re-tokenizes the
-    # corpus per reference.  The call runs the fold's exchanges.
-    # n_tokens = Σ m and Σ m·q are the same integers as the
-    # per-occurrence sums, in any order.
+    # folded frame feeds both the vocabulary and the scoring join; the
+    # corpus is tokenized once, because the second reference reads the
+    # fold's shuffle as a ReusedExchange.  n_tokens = Σ m and Σ m·q are
+    # the same integers as the per-occurrence sums, in any order.
     folded = (
-        spread_scan(docs)
-        .select(
+        docs.select(
             F.col(id_col).alias("id"),
             F.explode(
                 F.filter(
@@ -403,7 +394,6 @@ def unigram_logppl(
         )
         .groupBy("id", "tok")
         .agg(F.count(F.lit(1)).alias("_m"))
-        .localCheckpoint(eager=False)
     )
     vocab = folded.groupBy("tok").agg(F.sum("_m").alias("_c"))
     total = F.broadcast(
@@ -464,12 +454,7 @@ def bigram_logppl(
     no row (both engines drop them in the inner join).  Reference
     analog: the assessment stage's per-document confidence signal
     (``idp_common/assessment/service.py``), replaced by a corpus-
-    statistics language-model score as ``unigram_logppl`` documents.
-
-    The per-(doc, pair) fold is ``localCheckpoint(eager=False)``-ed.
-    That is not lazy under AQE: the call runs the fold's exchanges
-    while the plan is being built.  Its blocks stay in executor storage
-    until the session ends (nothing unpersists them)."""
+    statistics language-model score as ``unigram_logppl`` documents."""
     from ..sources.tables import spread_scan
 
     toks = spread_scan(docs).select(
@@ -486,9 +471,15 @@ def bigram_logppl(
     # combine, and the natural hot key ("of the" at corpus scale)
     # shrinks to one row per containing doc.  c2 aggregates FROM the
     # folded rows (weighted sum); Σ m and Σ m·q are the same integers
-    # as the per-occurrence sums in any order.  The folded frame feeds
-    # c2 and the scoring join, so it is localCheckpointed against
-    # double tokenization.  The call runs the fold's exchanges.
+    # as the per-occurrence sums in any order.
+    #
+    # The fold feeds c2, c1 (through c2) and the scoring join.  The
+    # corpus is tokenized once and c2 aggregated once because every
+    # repeated reference reads the fold's and c2's shuffles as a
+    # ReusedExchange.  That needs the references to be the same plan:
+    # the explicit not-null filter matches the one Catalyst infers
+    # from the (prev, cur) join, which the c1 path alone would not get
+    # (prev and cur are never null; the filter drops nothing).
     folded = (
         toks.where(F.size("_t") >= 2)
         .select(
@@ -501,9 +492,9 @@ def bigram_logppl(
             ).alias("_p"),
         )
         .select("id", F.col("_p.prev").alias("prev"), F.col("_p.cur").alias("cur"))
+        .where(F.col("prev").isNotNull() & F.col("cur").isNotNull())
         .groupBy("id", "prev", "cur")
         .agg(F.count(F.lit(1)).alias("_m"))
-        .localCheckpoint(eager=False)
     )
     c2 = folded.groupBy("prev", "cur").agg(F.sum("_m").alias("_c2"))
     c1 = c2.groupBy("prev").agg(F.sum("_c2").alias("_c1"))

@@ -196,15 +196,18 @@ def replay_deletions(spark: SparkSession, out_dir: str) -> dict:
     current extracted output — the recovery step after a forced
     rollback (``allow_undelete=True``) + resume re-extracted buckets
     containing conversations that had been deleted.  Idempotent: a
-    conversation already absent deletes zero rows.  Returns the merged
-    ``{bucket: n_deleted}`` across all replayed entries."""
+    conversation already absent deletes zero rows.  Runs the deleter of
+    the output's layout.  Returns the merged ``{bucket: n_deleted}``
+    across all replayed entries."""
     manifest = read_manifest(out_dir)
     all_ids = sorted(
         {c for entry in manifest.get("deletions", []) for c in entry["conv_ids"]}
     )
     if not all_ids:
         return {}
-    return delete_conversations(spark, out_dir, all_ids)
+    return _delete(
+        spark, out_dir, all_ids, False, versioned="data_locations" in manifest
+    )
 
 
 def _write_lineage(out_dir: str, tally: dict) -> None:

@@ -84,7 +84,11 @@ def main() -> None:
         "NO Exchange anywhere: MapInArrow sits directly on the pruned "
         "scan, so text bytes never leave their scan task.  Valid when "
         "the input layout is byte-balanced (parquet/Iceberg scans are); "
-        "measured ~1.5x the salted path at sf0.1.  The salted default "
+        "on a 4-core host a checkpointed wave without the shuffle was "
+        "not faster than the salted one (1.644 s against 1.561 s, "
+        "medians of 7-8 alternating runs of 16 buckets in one process); "
+        "the ~1.5x gain was measured at sf0.1 on a 32-core host.  The "
+        "salted default "
         "remains for conv-clustered inputs, where the shuffle IS the "
         "skew defusal.",
         extract_turns(
@@ -206,16 +210,18 @@ def main() -> None:
         "aggregate — unverified pairs never materialize); carry=False "
         "546-678 s / 7.4 GB = banded hashes (~0.8 GB) + the inherent "
         "candidate-pair distinct exchange (5.5 GB) + verify joins.  "
-        "The r7 plan repair is load-bearing: cand/sh were multiply "
-        "referenced with no materialization (scan + Python-UDF "
-        "pipeline re-evaluated per reference) and the STATIC plan "
+        "The r7 plan repair is load-bearing: the STATIC plan "
         "sort-merge-joined the full text column for the candidate-id "
         "semi-join — runtime AQE happened to rescue the exchange, but "
         "an AQE-off or conservative-threshold cluster would have "
         "executed it; unrepaired the leg measured 1004-1117 s.  Now: "
-        "EXPLICIT broadcast semi-join + lazy localCheckpoint on cand "
-        "and sh (single evaluation; storage bounded by LSH collision "
-        "count).  RULE: default carry=True — on CPU-bound or "
+        "EXPLICIT broadcast semi-join.  cand is read three times and "
+        "sh twice, and each runs once: in the final adaptive plan the "
+        "repeated references are ReusedExchange nodes of the distinct's "
+        "and the verify joins' shuffles, with one ArrowEvalPython "
+        "signature node (this explain is the initial plan, so it still "
+        "prints every reference; the final plan is pinned by "
+        "tests/test_plan_hygiene.py).  RULE: default carry=True — on CPU-bound or "
         "local-disk-shuffle clusters it wins 4.6-8x.  Switch to "
         "carry=False only when (a) the corpus is UNTRUSTED (its "
         "string verify is immune to crafted hash collisions — "
@@ -339,12 +345,18 @@ def main() -> None:
     add(
         "Bloom incremental dedup (round 7)",
         "Exact anti-join semantics with a Bloom-pruned plan: ONE "
-        "ArrowEvalPython probe node over the (lazily checkpointed) "
-        "incoming scan feeds both branches — the definitely-novel "
-        "rows union straight through with NO join, and only the "
-        "maybe-seen slice enters the LeftAnti join against the "
-        "reference keys.  The bitmap itself never appears in the "
-        "plan (SparkContext broadcast into the UDF).",
+        "ArrowEvalPython probe node over the incoming scan feeds both "
+        "branches — the definitely-novel rows union straight through "
+        "with NO join, and only the maybe-seen slice enters the "
+        "LeftAnti join against the reference keys.  Both branches "
+        "read the probe through the package's one remaining "
+        "localCheckpoint (the Scan ExistingRDD leaves below): no "
+        "exchange sits under the UDF, so exchange reuse cannot share "
+        "it, and without the checkpoint the UDF runs three times "
+        "(+30% at sf0.1, see bloom_incremental_dedup's docstring).  "
+        "The call starts no job while the plan is built.  The bitmap "
+        "itself never appears in the plan (SparkContext broadcast into "
+        "the UDF).",
         (lambda: (
             lambda ref, inc: dedup.bloom_incremental_dedup(
                 inc,

@@ -152,26 +152,40 @@ class TestResume:
         assert done[2] == {0, 1, 2, 3}
         assert done[3] == {0, 1}
 
+    @pytest.mark.parametrize("versioned", [False, True], ids=["inplace", "versioned"])
     def test_rollback_crossing_delete_refused_then_replayed(
-        self, spark, small_corpus, tmp_path_factory
+        self, spark, small_corpus, tmp_path_factory, versioned
     ):
         """Rolling back past a delete_conversations commit would
         resurrect the deleted conversations on resume (the source
         corpus still has them).  Such rollbacks are refused unless
         forced with allow_undelete=True, and replay_deletions restores
-        compliance after the forced resume (ADVICE r5, medium)."""
+        compliance after the forced resume (ADVICE r5, medium).  On the
+        versioned layout the rolled-back rows are readable at once, and
+        replay_deletions must run that layout's deleter."""
         from accelerated_intelligent_document_processing_on_aws_spark.sources.checkpoint import (
             delete_conversations,
+            delete_conversations_versioned,
             manifest_as_of,
+            read_snapshot,
             replay_deletions,
             rollback_to_snapshot,
         )
 
+        if versioned:
+            run, delete = run_versioned_extraction, delete_conversations_versioned
+        else:
+            run, delete = run_checkpointed_extraction, delete_conversations
+
+        def extracted():
+            if versioned:
+                return read_snapshot(spark, out)
+            return spark.read.parquet(os.path.join(out, "extracted"))
+
         src = spark.read.parquet(small_corpus)
         out = str(tmp_path_factory.mktemp("undel") / "run")
-        run_checkpointed_extraction(spark, src, out, n_buckets=8, wave_size=2)
+        run(spark, src, out, n_buckets=8, wave_size=2)
         last_wave_sid = read_manifest(out)["snapshot_id"]
-        ext = spark.read.parquet(os.path.join(out, "extracted"))
         # victims must live in buckets the forced rollback will re-extract,
         # or the resurrection hazard can't manifest
         sid1 = read_manifest(out)["snapshots"][1]["snapshot_id"]
@@ -179,14 +193,15 @@ class TestResume:
         rolled_back = sorted(set(range(8)) - done_at_sid1)
         victims = [
             r["conv_id"]
-            for r in ext.where(F.col("bucket").isin(rolled_back))
+            for r in extracted()
+            .where(F.col("bucket").isin(rolled_back))
             .select("conv_id")
             .distinct()
             .limit(3)
             .collect()
         ]
         assert victims
-        deleted = delete_conversations(spark, out, victims)
+        deleted = delete(spark, out, victims)
         assert sum(deleted.values()) > 0
 
         # refuse: target snapshot precedes the delete commit
@@ -198,27 +213,18 @@ class TestResume:
         rollback_to_snapshot(out, delete_sid)
 
         # forced rollback past the delete, resume, then replay the log
-        forced = rollback_to_snapshot(out, sid1, allow_undelete=True)
+        rollback_to_snapshot(out, sid1, allow_undelete=True)
         assert len(resume_pending(out, 8)) == 4
-        run_checkpointed_extraction(spark, src, out, n_buckets=8, wave_size=2)
-        resurrected = (
-            spark.read.parquet(os.path.join(out, "extracted"))
-            .where(F.col("conv_id").isin(victims))
-            .count()
-        )
+        run(spark, src, out, n_buckets=8, wave_size=2)
+        resurrected = extracted().where(F.col("conv_id").isin(victims)).count()
         assert resurrected > 0  # the hazard is real: resume undid the delete
-        replay_deletions(spark, out)
-        assert (
-            spark.read.parquet(os.path.join(out, "extracted"))
-            .where(F.col("conv_id").isin(victims))
-            .count()
-            == 0
-        )
+        replayed = replay_deletions(spark, out)
+        assert sum(replayed.values()) == resurrected
+        assert extracted().where(F.col("conv_id").isin(victims)).count() == 0
         # delete commits never mutate bucket state
         as_of_delete = manifest_as_of(out, delete_sid)
         as_of_wave = manifest_as_of(out, last_wave_sid)
         assert as_of_delete["done_buckets"] == as_of_wave["done_buckets"]
-        _ = forced
 
     def test_rerun_completed_is_noop(self, spark, small_corpus, tmp_path_factory):
         src = spark.read.parquet(small_corpus)

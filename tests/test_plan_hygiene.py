@@ -1,6 +1,6 @@
 """Plan-hygiene gate over the ENTIRE query registry.
 
-Two properties every registered plan must hold for the 100 TB design
+Three properties every registered plan must hold for the 100 TB design
 (enforced here so a regression fails CI, not a judge audit):
 
 - no ``BatchEvalPython`` — row-at-a-time Python UDFs are banned from
@@ -8,19 +8,65 @@ Two properties every registered plan must hold for the 100 TB design
   ``MapInArrow`` are the only Python surfaces);
 - no ``CartesianProduct`` — an unbroadcast cross product is always a
   bug at scale (the broadcast-1-row stats join pattern plans as
-  ``BroadcastNestedLoopJoin`` and is allowed).
+  ``BroadcastNestedLoopJoin`` and is allowed);
+- building the plan starts no Spark job beyond a read's schema
+  inference, except the driver-side fits named in ``PLAN_TIME_FITS``.
 """
 
+import inspect
 import io
 import re
+import uuid
 from collections import Counter
 from contextlib import redirect_stdout
 
 import pytest
 
+from accelerated_intelligent_document_processing_on_aws_spark.operators import dedup, similarity
 from accelerated_intelligent_document_processing_on_aws_spark.plans import QUERIES
 
 SF = "/root/testdata/sf0.001"
+
+# Functions whose actions may run while a registry plan is built: model
+# fits that collect to the driver before the plan that uses the model
+# exists.  A job belongs to one when its stages' call site is a line of
+# the function.
+PLAN_TIME_FITS = (
+    similarity.train_centroids,  # ann_ivf_*, semantic_dedup_keep
+    similarity.train_centroids_distributed,  # ann_ivf_*, ann_pq_rerank_topk
+    similarity.train_pq_codebooks,  # ann_pq_rerank_topk
+    dedup.bloom_build,  # bloom_incremental_dedup_docs
+)
+
+
+def _fit_lines() -> dict[str, list[range]]:
+    spans: dict[str, list[range]] = {}
+    for fn in PLAN_TIME_FITS:
+        lines, first = inspect.getsourcelines(fn)
+        spans.setdefault(inspect.getsourcefile(fn), []).append(
+            range(first, first + len(lines))
+        )
+    return spans
+
+
+def _plan_time_stray_stages(sc, group: str) -> list[str]:
+    """Names of the stages that jobs of ``group`` ran, other than a
+    read's schema inference (``parquet at ...``) and the call sites of
+    ``PLAN_TIME_FITS``."""
+    spans = _fit_lines()
+    stray = []
+    tracker = sc.statusTracker()
+    for job in tracker.getJobIdsForGroup(group):
+        for stage in tracker.getJobInfo(job).stageIds:
+            name = tracker.getStageInfo(stage).name
+            site = re.fullmatch(r"\S+ at (.+):(\d+)", name)
+            if name.startswith("parquet at ") or (
+                site
+                and any(int(site[2]) in r for r in spans.get(site[1], ()))
+            ):
+                continue
+            stray.append(name)
+    return stray
 
 
 def _plan(df) -> str:
@@ -55,7 +101,15 @@ def _repeated_hof_subtrees(optimized: str) -> dict[str, int]:
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_no_row_python_and_no_cartesian(spark, name):
-    df = QUERIES[name](spark, SF)
+    sc = spark.sparkContext
+    group = f"build-{name}-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, f"{name} at plan time")
+    try:
+        df = QUERIES[name](spark, SF)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    stray = _plan_time_stray_stages(sc, group)
+    assert not stray, f"{name}: building the plan ran jobs: {stray}"
     plan = _plan(df)
     assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF"
     assert "CartesianProduct" not in plan, f"{name}: unbroadcast cross product"
@@ -177,3 +231,79 @@ def test_evaluation_cascade_scans_orders_once(spark, name):
     plan = QUERIES[name](spark, SF)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("FileScan") == 1, plan
     assert "Union" not in plan, plan
+
+
+def _single_eval_cases(spark, transcripts_path):
+    from accelerated_intelligent_document_processing_on_aws_spark.operators.extract import (
+        extract_turns_skew_aware,
+    )
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    return {
+        "skew_aware": extract_turns_skew_aware(
+            spark.read.parquet(transcripts_path), num_partitions=4, heavy_turns=40
+        ).drop("_partition_id", "_row_ms"),
+        "unigram_logppl": QUERIES["unigram_logppl_docs"](spark, SF),
+        "simhash_pairs": QUERIES["simhash_near_dup"](spark, SF),
+        "minhash_lsh_lean": dedup.minhash_lsh_pairs(
+            docs, shingle_n=2, num_hashes=32, bands=8, jaccard_threshold=0.3,
+            carry_shingles=False,
+        ),
+    }
+
+
+# Per case: (node pattern → evaluations in the final plan, row count,
+# md5 of the sorted row reprs).  Each pattern is the subtree that the
+# plan references more than once: the heavy-id count (the kernel runs
+# once per branch, on disjoint rows), the tokenizing explode, and the
+# signature UDFs.
+SINGLE_EVAL = {
+    "skew_aware": (
+        {r"MapInArrow": 2, r"functions=\[count\(1\)\]": 1},
+        7592,
+        "9d3211599c2cc326b9e0b843f5c44fd8",
+    ),
+    "unigram_logppl": (
+        {r"Generate explode": 1, r"FileScan": 1},
+        500,
+        "2df3fd971bd0793fd7d009251b8fb23f",
+    ),
+    "simhash_pairs": (
+        {r"ArrowEvalPython": 1, r"FileScan": 1},
+        62,
+        "eb8d76c903b3fa004445089fdeac8364",
+    ),
+    "minhash_lsh_lean": (
+        {r"ArrowEvalPython": 1},
+        28,
+        "da1d11bdffea20f873624244bda588a5",
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(SINGLE_EVAL))
+def test_multiply_referenced_subtree_runs_once(spark, transcripts_path, case):
+    """Each of these plans reads one subtree from two or more places.
+    Spark's exchange reuse must make that subtree run once: the final
+    adaptive plan holds a ReusedExchange and one evaluation of the
+    subtree, and the rows are the ones pinned here.
+
+    The inputs are read from parquet.  Over a cached input AQE reuses
+    no exchange above the cached relation, and the subtree runs once
+    per reference (NOTES.md, "Exchange reuse in place of
+    localCheckpoint"), so the cache another test module leaves on the
+    sf0.001 tables is dropped first."""
+    import hashlib
+
+    spark.catalog.clearCache()
+    df = _single_eval_cases(spark, transcripts_path)[case]
+    rows = df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString()
+    final = final.split("== Initial Plan ==")[0]
+    assert "ReusedExchange" in final, final
+    nodes, n_rows, digest = SINGLE_EVAL[case]
+    for pattern, n in nodes.items():
+        assert len(re.findall(pattern, final)) == n, (pattern, final)
+    assert len(rows) == n_rows
+    got = hashlib.md5("\n".join(sorted(map(repr, rows))).encode()).hexdigest()
+    assert got == digest
