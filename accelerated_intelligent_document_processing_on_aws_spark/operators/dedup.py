@@ -377,7 +377,10 @@ def minhash_lsh_pairs(
       verify is exact set Jaccard with no hash in the loop, so crafted
       polyhash collisions (see :func:`minhash_bands_shingles_udf`'s
       threat-model note) cannot push a non-duplicate past the
-      threshold."""
+      threshold.  The candidate and shingle subtrees it reads twice
+      are evaluated once only through Spark's exchange reuse.  Over a
+      cached input (an ``InMemoryRelation``) that reuse does not
+      happen, and each runs once per reference."""
     if carry_shingles:
         return _minhash_pairs_carry(
             docs, id_col, text_col, shingle_n, num_hashes, bands,
@@ -546,7 +549,12 @@ def simhash_pairs(
     so a task does at most 256² hamming evaluations per key however
     degenerate the bucket.  The O(n²) candidate volume of a truly
     degenerate bucket is inherent to the semantics (those pairs exist);
-    run exact dedup first if byte-identical floods are expected."""
+    run exact dedup first if byte-identical floods are expected.
+
+    Both sides of the self-join read one fingerprint frame; the UDF
+    runs once only through Spark's exchange reuse.  Over a cached input
+    (an ``InMemoryRelation``) that reuse does not happen, and the UDF
+    runs once per reference."""
     if max_hamming < 0:
         raise ValueError("max_hamming must be >= 0")
     n_chunks = max_hamming + 1

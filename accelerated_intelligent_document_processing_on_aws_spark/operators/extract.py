@@ -20,14 +20,14 @@ Scale design (100 TB / 10^12 turns):
 - **Column pruning.**  The kernel consumes exactly
   (conv_id, turn_idx, role, text, tool, ts); Catalyst prunes the scan
   to those columns (visible as ReadSchema in .explain).
-- **Lineage.**  Each output row carries its kernel task's partition id
-  and amortized per-row latency; :func:`lineage` aggregates them into
-  the north-rule lineage table (partition_id, rows_in, rows_out,
-  extract_ms) — the analog of the reference's metering capture
-  (``reporting/save_reporting_data.py:1084-1097``).  A checkpoint wave
-  (:func:`extract_wave`) instead counts the same table inside the
-  kernel task, into an accumulator, so it needs no second pass over
-  its output.
+- **Lineage.**  A checkpoint wave (:func:`extract_wave`) counts the
+  north-rule lineage table (partition_id, rows_in, rows_out,
+  extract_ms) inside each kernel task, into an accumulator, so it needs
+  no second pass over its output; ``sources/checkpoint.py`` writes it
+  beside the extracted table.  It is the analog of the reference's
+  metering capture (``reporting/save_reporting_data.py:1084-1097``).
+  Every kernel call returns the same columns, :data:`EXTRACTED_SCHEMA`;
+  a wave's output adds its checkpoint ``bucket``.
 """
 
 from __future__ import annotations
@@ -68,18 +68,15 @@ EXTRACTED_SCHEMA = T.StructType(
         T.StructField("classification", T.StringType()),
         T.StructField("boundary", T.StringType()),
         T.StructField("confidence", T.DoubleType()),
-        T.StructField("_partition_id", T.IntegerType()),
-        T.StructField("_row_ms", T.DoubleType()),
     ]
 )
 
 KERNEL_COLUMNS = ("conv_id", "turn_idx", "role", "text", "tool", "ts")
 
 # A checkpoint wave's kernel output: the extracted columns and the
-# passed-through checkpoint bucket.  The per-row lineage columns are
-# replaced by the wave's lineage tally.
+# passed-through checkpoint bucket.
 WAVE_SCHEMA = T.StructType(
-    EXTRACTED_SCHEMA.fields[:-2] + [T.StructField("bucket", T.IntegerType())]
+    EXTRACTED_SCHEMA.fields + [T.StructField("bucket", T.IntegerType())]
 )
 
 
@@ -104,8 +101,7 @@ def _kernel_batches_arrow(batches, tally=None):
     object columns).
 
     With ``tally`` (the accumulator of :func:`extract_wave`) the input also
-    carries the checkpoint ``bucket``: each batch passes it through in
-    place of the per-row ``_partition_id``/``_row_ms`` columns
+    carries the checkpoint ``bucket``: each batch passes it through
     (:data:`WAVE_SCHEMA`) and adds its per-``(bucket, partition_id)``
     lineage counts to ``tally``."""
     import pyarrow as pa
@@ -175,10 +171,8 @@ def _kernel_batches_arrow(batches, tally=None):
             pa.array(ex_bnd, pa.string()),
             pa.array(ex_conf, pa.float64()),
         ]
-        if tally is None:
-            out += [pa.array([pid] * n, pa.int32()), pa.array([row_ms] * n, pa.float64())]
-            schema = EXTRACTED_SCHEMA
-        else:
+        schema = EXTRACTED_SCHEMA
+        if tally is not None:
             out.append(col["bucket"])
             schema = WAVE_SCHEMA
             buckets = col["bucket"].to_pylist()
@@ -250,8 +244,8 @@ def extract_wave(part: DataFrame, salt: int = 16):
     once, by its write.
 
     Returns ``(extracted, tally)``.  ``tally.value`` maps ``(bucket,
-    partition_id)`` to ``(rows_in, rows_out, extract_ms)``, the columns
-    of :func:`lineage` before rounding.  It is complete once an action
+    partition_id)`` to ``(rows_in, rows_out, extract_ms)``, the lineage
+    table's columns before rounding.  It is complete once an action
     over ``extracted`` has finished, and counts each row once only if no
     shuffle follows the kernel in that action's plan (see
     ``sources/checkpoint.py``)."""
@@ -289,11 +283,15 @@ def extract_turns_skew_aware(
     per-turn; union order is immaterial under the downstream
     Window.partitionBy(conv_id).orderBy(turn_idx) restore) — asserted
     by tests/test_pipeline_spark.py's skew-aware equivalence test.
+
+    Both branches read the heavy-id set.  The aggregate runs once only
+    through exchange reuse: the second branch's broadcast is a
+    ``ReusedExchange`` of the first's (pinned by
+    tests/test_plan_hygiene.py).  Over a cached input (an
+    ``InMemoryRelation``) that reuse does not happen, and the aggregate
+    runs once per branch.
     """
     df = transcripts.select(*KERNEL_COLUMNS)
-    # both branches read the heavy-id set; the aggregate runs once,
-    # because the second branch's broadcast is a ReusedExchange of the
-    # first's (pinned by tests/test_plan_hygiene.py)
     heavy_ids = F.broadcast(
         df.groupBy("conv_id")
         .agg(F.count(F.lit(1)).alias("_n"))
@@ -306,25 +304,6 @@ def extract_turns_skew_aware(
     return light.mapInArrow(_kernel_batches_arrow, schema=EXTRACTED_SCHEMA).unionAll(
         heavy.mapInArrow(_kernel_batches_arrow, schema=EXTRACTED_SCHEMA)
     )
-
-
-def lineage(extracted: DataFrame, by: tuple[str, ...] = ()) -> DataFrame:
-    """North-rule lineage table: one row per kernel task partition
-    (× any extra ``by`` columns, e.g. the checkpoint bucket, so lineage
-    partitions line up with the extracted table's layout)."""
-    return (
-        extracted.groupBy(*by, F.col("_partition_id").alias("partition_id"))
-        .agg(
-            F.count(F.lit(1)).alias("rows_in"),
-            F.count("extracted_text").alias("rows_out"),
-            F.round(F.sum("_row_ms"), 3).alias("extract_ms"),
-        )
-        .withColumn("ts", F.current_timestamp())
-    )
-
-
-def drop_internal(extracted: DataFrame) -> DataFrame:
-    return extracted.drop("_partition_id", "_row_ms")
 
 
 def alerts(extracted: DataFrame, threshold: float = 0.8) -> DataFrame:

@@ -369,7 +369,14 @@ def unigram_logppl(
     no row (both engines drop them in the inner join).  Reference
     analog: the assessment stage's per-document confidence scoring
     (``assessment/service.py``) re-expressed as a corpus-statistics
-    quality signal."""
+    quality signal.
+
+    The corpus is tokenized once only through Spark's exchange reuse:
+    the vocabulary and the scoring join read the fold's shuffle, the
+    second as a ``ReusedExchange``.  Over a cached input (an
+    ``InMemoryRelation``) that reuse does not happen, and the tokenizing
+    subtree runs once per reference: 3 times in ``unigram_logppl_docs``
+    at sf0.001."""
     # round 8 (the bigram prefold pattern, applied here first): fold
     # occurrences to per-(doc, token) MULTIPLICITY before anything
     # joins or re-aggregates — the fold's groupBy gets map-side
@@ -454,7 +461,12 @@ def bigram_logppl(
     no row (both engines drop them in the inner join).  Reference
     analog: the assessment stage's per-document confidence signal
     (``idp_common/assessment/service.py``), replaced by a corpus-
-    statistics language-model score as ``unigram_logppl`` documents."""
+    statistics language-model score as ``unigram_logppl`` documents.
+
+    The corpus is tokenized once and c2 aggregated once only through
+    Spark's exchange reuse (see the fold's comment).  Over a cached
+    input (an ``InMemoryRelation``) that reuse does not happen, and the
+    repeated subtree runs once per reference."""
     from ..sources.tables import spread_scan
 
     toks = spread_scan(docs).select(

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from ..fixtures.transcripts import generate_transcripts
 from ..operators import dedup, segmentation as seg, similarity
-from ..operators.extract import alerts, drop_internal, extract_turns, lineage
+from ..operators.extract import alerts, extract_turns
 from ..sources.tables import load_table as _t
 
 ENTRIES: dict = {}
@@ -52,7 +52,7 @@ def _transcripts(spark, sf_dir: str):
 
 @q("pipeline_extract_turns")
 def pipeline_extract_turns(spark, sf_dir):
-    out = drop_internal(extract_turns(_transcripts(spark, sf_dir), salt=8))
+    out = extract_turns(_transcripts(spark, sf_dir), salt=8)
     return out.select(
         "conv_id", "turn_idx", "payload_kind", "classification", "boundary",
         "confidence", F.length("extracted_text").alias("text_len"),
@@ -94,7 +94,16 @@ def pipeline_lineage(spark, sf_dir):
     # num_partitions pinned so the lineage row count is stable across
     # driver parallelism choices (defaultParallelism varies by box)
     ext = extract_turns(_transcripts(spark, sf_dir), salt=8, num_partitions=32)
-    return lineage(ext).select("partition_id", "rows_in", "rows_out")
+    # projected straight on the kernel's output, so the partition id is
+    # the kernel task's
+    return (
+        ext.select(F.spark_partition_id().alias("partition_id"), "extracted_text")
+        .groupBy("partition_id")
+        .agg(
+            F.count(F.lit(1)).alias("rows_in"),
+            F.count("extracted_text").alias("rows_out"),
+        )
+    )
 
 
 @q("pipeline_confidence_alerts")

@@ -35,7 +35,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.extract import drop_internal, extract_turns, extract_wave
+from ..operators.extract import extract_turns, extract_wave
 from .reporting import coalesce_rewrite
 
 MANIFEST = "_manifest.json"
@@ -212,10 +212,10 @@ def replay_deletions(spark: SparkSession, out_dir: str) -> dict:
 
 def _write_lineage(out_dir: str, tally: dict) -> None:
     """Write a wave's lineage, one parquet file per bucket under
-    ``lineage/bucket=K/``: the columns and types a Spark
-    ``partitionBy("bucket")`` write of ``operators.extract.lineage``
-    gives (``partition_id int, rows_in bigint, rows_out bigint,
-    extract_ms double, ts timestamp``, ``bucket`` from the directory).
+    ``lineage/bucket=K/``: ``partition_id int, rows_in bigint, rows_out
+    bigint, extract_ms double, ts timestamp``, and ``bucket int`` from
+    the directory, the types a Spark ``partitionBy("bucket")`` write of
+    the same rows gives.
     ``tally`` is the value of the accumulator
     :func:`~..operators.extract.extract_wave` returns; ``ts`` is the
     driver's time at the end of the wave.  Each file is renamed into
@@ -685,8 +685,7 @@ def versioned_stream_sink(out_dir: str, salt: int = 8):
             return  # at-least-once redelivery: already committed
         sid_next = int(manifest.get("snapshot_id", 0)) + 1
         loc = f"v={sid_next}/batch={int(batch_id)}"
-        extracted = extract_turns(batch_df, salt=salt)
-        drop_internal(extracted).write.mode("overwrite").parquet(
+        extract_turns(batch_df, salt=salt).write.mode("overwrite").parquet(
             os.path.join(out_dir, "data", loc)
         )
         data = dict(manifest.get("data_locations", {}))

@@ -73,9 +73,8 @@ def run_stream_to_parquet(transcripts_stream: DataFrame, out_dir: str,
     """Append the extracted stream to a parquet sink with exactly-once
     checkpointing; ``once=True`` drains available input then stops
     (used in tests and backfills)."""
-    ext = extracted_stream(transcripts_stream).drop("_partition_id", "_row_ms")
     writer = (
-        ext.writeStream.format("parquet")
+        extracted_stream(transcripts_stream).writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")

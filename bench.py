@@ -192,14 +192,14 @@ def main() -> None:
     # one-time costs, not engine throughput), then time the full corpus
     # min-of-2 — same steady-state policy as the per-query timings (this
     # VM shows ±4× hypervisor steal-noise on multi-second measurements)
-    extract_turns(transcripts.limit(20_000), num_partitions=cpus, salt=16).count()
+    extract_turns(transcripts.limit(20_000), salt=16).count()
     extract_sec = float("inf")
     # min-of-3: this VM's host-side slowdowns are invisible to the guest
     # (/proc/stat steal reads 0 while identical runs spread 13.7-20.2s);
     # a third sample materially tightens the headline metric
     for _ in range(3):
         t0 = time.perf_counter()
-        extracted = extract_turns(transcripts, num_partitions=cpus * 3, salt=16)
+        extracted = extract_turns(transcripts, salt=16)
         out_rows = extracted.count()
         extract_sec = min(extract_sec, time.perf_counter() - t0)
         assert out_rows == n_turns, (out_rows, n_turns)
@@ -223,9 +223,7 @@ def main() -> None:
     skew_sec = float("inf")
     for _ in range(3):
         t0 = time.perf_counter()
-        out_rows = extract_turns_skew_aware(
-            transcripts, num_partitions=cpus, heavy_turns=200
-        ).count()
+        out_rows = extract_turns_skew_aware(transcripts, heavy_turns=200).count()
         skew_sec = min(skew_sec, time.perf_counter() - t0)
         assert out_rows == n_turns
 

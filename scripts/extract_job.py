@@ -36,16 +36,6 @@ def main() -> None:
                          "partitions; for byte-balanced input layouts); "
                          ">0 = salted conv-hash repartition (skew defusal "
                          "for conv-clustered inputs)")
-    ap.add_argument("--strategy", choices=["salted", "skew-aware"],
-                    default="salted",
-                    help="skew-aware = only conversations longer than "
-                         "--heavy-turns take the salted repartition; the "
-                         "rest run on scan partitions (shuffle bytes ∝ "
-                         "the Zipf-tail fraction — the network-bound-"
-                         "cluster default)")
-    ap.add_argument("--heavy-turns", type=int, default=10_000)
-    ap.add_argument("--skip-checkpoint", action="store_true",
-                    help="single-shot extraction without bucket waves")
     ap.add_argument("--versioned", action="store_true",
                     help="Iceberg-style versioned data layout: every "
                          "wave/delete commit writes NEW immutable "
@@ -62,8 +52,6 @@ def main() -> None:
 
     from accelerated_intelligent_document_processing_on_aws_spark.operators.extract import (
         extract_turns,
-        extract_turns_skew_aware,
-        lineage,
     )
     from accelerated_intelligent_document_processing_on_aws_spark.sources.checkpoint import (
         read_snapshot,
@@ -89,24 +77,7 @@ def main() -> None:
         extract_turns(transcripts.limit(20000), salt=args.salt).count()
 
     t0 = time.perf_counter()
-    if args.skip_checkpoint:
-        if args.strategy == "skew-aware":
-            extracted = extract_turns_skew_aware(
-                transcripts,
-                salt=max(args.salt, 1),
-                heavy_turns=args.heavy_turns,
-            )
-        else:
-            extracted = extract_turns(transcripts, salt=args.salt)
-        # ONE pass: write the extracted table (internal lineage columns
-        # included — they are two narrow numerics).  Lineage then
-        # aggregates from the written files with column pruning, and the
-        # row count is parquet metadata — no multi-GB .cache() in heap.
-        extracted.write.mode("overwrite").parquet(args.output + "/extracted")
-        back = spark.read.parquet(args.output + "/extracted")
-        n_out = back.count()
-        lineage(back).write.mode("overwrite").parquet(args.output + "/lineage")
-    elif args.versioned:
+    if args.versioned:
         run_versioned_extraction(
             spark,
             transcripts,

@@ -73,8 +73,6 @@ def run_at(
         os.path.join(REPO, "scripts", "extract_job.py"),
         "--input", corpus,
         "--output", out,
-        "--skip-checkpoint",
-        "--salt", "16",
     ]
     proc = subprocess.run(cmd, capture_output=True, text=True, timeout=3600)
     for line in reversed(proc.stdout.strip().splitlines()):
@@ -200,9 +198,10 @@ N-vs-4N pair local[{args.n}] vs local[{args.xn}] gets {2 * args.n} and
 its own python worker co-scheduled by YARN/K8s, so this constraint is
 a local-mode artifact, not an engine property.
 
-- Job: `scripts/extract_job.py` (kernel extraction over the seeded
-  synthetic transcript corpus, {r_n['turns_in']} turns, Zipf-skewed
-  conversation lengths, salt=16).
+- Job: `scripts/extract_job.py` with its defaults: the checkpointed
+  extraction (16 buckets in one wave, salt 16) that writes the
+  extracted and lineage tables, over the seeded synthetic transcript
+  corpus, {r_n['turns_in']} turns, Zipf-skewed conversation lengths.
 - Invocation: `[taskset -c <pin>] spark-submit --master local[{{N}}]
   --py-files engine.zip ...`
 - Each sample runs N then 4N back-to-back, so both sides of a ratio

@@ -2,6 +2,7 @@ import os
 import sys
 
 import pytest
+from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -13,6 +14,25 @@ def spark():
     s = get_spark(app_name="idp-spark-tests", master="local[4]", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def kernel_tasks():
+    """Rows in and rows out per kernel task of an extracted frame, and
+    per any extra ``by`` columns.  The partition id is projected
+    straight on the kernel's output, so it is the kernel task's."""
+
+    def per_task(extracted, *by):
+        return (
+            extracted.withColumn("partition_id", F.spark_partition_id())
+            .groupBy(*by, "partition_id")
+            .agg(
+                F.count(F.lit(1)).alias("rows_in"),
+                F.count("extracted_text").alias("rows_out"),
+            )
+        )
+
+    return per_task
 
 
 @pytest.fixture(scope="session")

@@ -6,9 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from accelerated_intelligent_document_processing_on_aws_spark.operators.extract import (
-    drop_internal,
     extract_turns,
-    lineage,
 )
 from accelerated_intelligent_document_processing_on_aws_spark.sources import reporting
 from accelerated_intelligent_document_processing_on_aws_spark.sources.checkpoint import (
@@ -50,7 +48,7 @@ class TestResume:
 
         got = spark.read.parquet(os.path.join(out, "extracted"))
         # identical to a single-shot run
-        single = drop_internal(extract_turns(src, salt=4))
+        single = extract_turns(src, salt=4)
         a = {
             (r["conv_id"], r["turn_idx"]): r["extracted_text"]
             for r in got.select("conv_id", "turn_idx", "extracted_text").collect()
@@ -257,14 +255,14 @@ LINEAGE_KEY = ["bucket", "partition_id", "rows_in", "rows_out"]
 
 class TestWaveLineage:
     """A wave counts its lineage inside the kernel task of its one write
-    job; the rows must be those ``lineage()`` aggregates from the
-    extracted frame, with the same schema."""
+    job; the rows must be the per-task counts of an extraction of the
+    whole corpus."""
 
     @pytest.mark.parametrize(
         "writer", [run_checkpointed_extraction, run_versioned_extraction]
     )
     def test_lineage_equals_aggregated_lineage_across_resume(
-        self, spark, small_corpus, tmp_path, writer
+        self, spark, small_corpus, tmp_path, writer, kernel_tasks
     ):
         src = spark.read.parquet(small_corpus)
         out = str(tmp_path / "run")
@@ -275,14 +273,14 @@ class TestWaveLineage:
         got = spark.read.parquet(os.path.join(out, "lineage"))
         # a row's kernel partition depends only on the row, so one
         # extraction of the whole corpus has the waves' lineage
-        want = lineage(
-            extract_turns(src, salt=4).withColumn("bucket", bucket_col(8)),
-            by=("bucket",),
+        want = kernel_tasks(
+            extract_turns(src, salt=4).withColumn("bucket", bucket_col(8)), "bucket"
         )
         assert sorted(map(tuple, got.select(LINEAGE_KEY).collect())) == sorted(
             map(tuple, want.select(LINEAGE_KEY).collect())
         )
         assert got.agg(F.sum("rows_in")).first()[0] == src.count()
+        assert got.where(F.col("extract_ms") < 0).count() == 0
 
     def test_lineage_schema_unchanged(self, spark, small_corpus, tmp_path):
         out = str(tmp_path / "run")

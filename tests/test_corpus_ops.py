@@ -15,12 +15,16 @@ SF = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def docs(spark):
-    return spark.read.parquet(f"{SF}/documents.parquet").cache()
+    df = spark.read.parquet(f"{SF}/documents.parquet").cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")
 def emb(spark):
-    return spark.read.parquet(f"{SF}/embeddings.parquet").cache()
+    df = spark.read.parquet(f"{SF}/embeddings.parquet").cache()
+    yield df
+    df.unpersist()
 
 
 class TestDedup:

@@ -3,6 +3,7 @@ per-turn text equality under stable turn ordering (SURVEY.md §5(b,c))."""
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from accelerated_intelligent_document_processing_on_aws_spark.fixtures import (
     generate_transcripts,
@@ -12,12 +13,20 @@ from accelerated_intelligent_document_processing_on_aws_spark.kernel.oracle impo
     sections_oracle,
 )
 from accelerated_intelligent_document_processing_on_aws_spark.operators.extract import (
+    EXTRACTED_SCHEMA,
     alerts,
     extract_turns,
-    lineage,
+    extract_turns_skew_aware,
+    extract_wave,
 )
 from accelerated_intelligent_document_processing_on_aws_spark.operators import (
     segmentation as seg,
+)
+from accelerated_intelligent_document_processing_on_aws_spark.sources.checkpoint import (
+    bucket_col,
+)
+from accelerated_intelligent_document_processing_on_aws_spark.streaming import (
+    extracted_stream,
 )
 
 
@@ -100,10 +109,6 @@ class TestByteEquality:
         # skew-aware hybrid (only heavy conversations shuffle) must be
         # row-identical too; tiny threshold forces BOTH branches to
         # carry rows
-        from accelerated_intelligent_document_processing_on_aws_spark.operators.extract import (
-            extract_turns_skew_aware,
-        )
-
         d = {
             (r["conv_id"], r["turn_idx"]): r["extracted_text"]
             for r in extract_turns_skew_aware(df, num_partitions=4, heavy_turns=20)
@@ -113,12 +118,32 @@ class TestByteEquality:
         assert d == b
 
 
+KERNEL_CALLS = {
+    "salted": lambda df: extract_turns(df, salt=8),
+    "unsalted": lambda df: extract_turns(df, salt=0),
+    "skew_aware": lambda df: extract_turns_skew_aware(df, heavy_turns=20),
+    "stream_on_batch": extracted_stream,
+    "wave": lambda df: extract_wave(df.withColumn("bucket", bucket_col(4)))[0],
+}
+
+
+@pytest.mark.parametrize("call", sorted(KERNEL_CALLS))
+def test_one_kernel_output_schema(spark, transcripts_path, call):
+    """Every kernel call returns :data:`EXTRACTED_SCHEMA`; a checkpoint
+    wave appends its ``bucket``.  No internal column reaches a caller."""
+    schema = KERNEL_CALLS[call](spark.read.parquet(transcripts_path)).schema
+    want = EXTRACTED_SCHEMA.fields
+    if call == "wave":
+        want = want + [T.StructField("bucket", T.IntegerType())]
+    assert schema == T.StructType(want)
+    assert not [f.name for f in schema.fields if f.name.startswith("_")]
+
+
 class TestLineage:
-    def test_lineage_accounts_for_every_row(self, extracted):
-        lin = lineage(extracted).collect()
+    def test_lineage_accounts_for_every_row(self, extracted, kernel_tasks):
+        lin = kernel_tasks(extracted).collect()
         assert sum(r["rows_in"] for r in lin) == extracted.count()
         assert all(r["rows_out"] == r["rows_in"] for r in lin)
-        assert all(r["extract_ms"] >= 0 for r in lin)
         pids = [r["partition_id"] for r in lin]
         assert len(pids) == len(set(pids))
 
@@ -223,16 +248,11 @@ class TestSegmentation:
 
 
 class TestSkewDefusal:
-    def test_salt_splits_giant_conversation(self, spark):
+    def test_salt_splits_giant_conversation(self, spark, kernel_tasks):
         """One pathological 3000-turn conversation must spread across
         kernel tasks instead of hot-spotting one partition (the north
         rule's salting requirement)."""
         from datetime import datetime, timezone
-
-        from accelerated_intelligent_document_processing_on_aws_spark.operators.extract import (
-            extract_turns,
-            lineage,
-        )
 
         ts = datetime(2026, 1, 1, tzinfo=timezone.utc)
         rows = [("conv-giant", i, "user", f"plain text turn {i} with enough words", None, ts)
@@ -244,7 +264,7 @@ class TestSkewDefusal:
             "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
         )
         ext = extract_turns(df, num_partitions=16, salt=16)
-        lin = lineage(ext).collect()
+        lin = kernel_tasks(ext).collect()
         sizes = sorted((r["rows_out"] for r in lin), reverse=True)
         total = sum(sizes)
         assert total == 3150
@@ -252,14 +272,9 @@ class TestSkewDefusal:
         # partition; with salt=16 no partition may hold more than ~1/4
         assert sizes[0] < total / 4, sizes[:5]
 
-    def test_salt_one_keeps_conv_together(self, spark):
+    def test_salt_one_keeps_conv_together(self, spark, kernel_tasks):
         """salt=1 degenerates to pure conv-hash partitioning (control)."""
         from datetime import datetime, timezone
-
-        from accelerated_intelligent_document_processing_on_aws_spark.operators.extract import (
-            extract_turns,
-            lineage,
-        )
 
         ts = datetime(2026, 1, 1, tzinfo=timezone.utc)
         rows = [("conv-giant", i, "user", f"words {i}", None, ts) for i in range(500)]
@@ -267,5 +282,5 @@ class TestSkewDefusal:
             rows,
             "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
         )
-        lin = lineage(extract_turns(df, num_partitions=8, salt=1)).collect()
+        lin = kernel_tasks(extract_turns(df, num_partitions=8, salt=1)).collect()
         assert max(r["rows_out"] for r in lin) == 500

@@ -242,7 +242,7 @@ def _single_eval_cases(spark, transcripts_path):
     return {
         "skew_aware": extract_turns_skew_aware(
             spark.read.parquet(transcripts_path), num_partitions=4, heavy_turns=40
-        ).drop("_partition_id", "_row_ms"),
+        ),
         "unigram_logppl": QUERIES["unigram_logppl_docs"](spark, SF),
         "simhash_pairs": QUERIES["simhash_near_dup"](spark, SF),
         "minhash_lsh_lean": dedup.minhash_lsh_pairs(
@@ -291,11 +291,10 @@ def test_multiply_referenced_subtree_runs_once(spark, transcripts_path, case):
     The inputs are read from parquet.  Over a cached input AQE reuses
     no exchange above the cached relation, and the subtree runs once
     per reference (NOTES.md, "Exchange reuse in place of
-    localCheckpoint"), so the cache another test module leaves on the
-    sf0.001 tables is dropped first."""
+    localCheckpoint"), so no test module may leave the sf0.001 tables
+    cached."""
     import hashlib
 
-    spark.catalog.clearCache()
     df = _single_eval_cases(spark, transcripts_path)[case]
     rows = df.collect()
     final = df._jdf.queryExecution().executedPlan().toString()

@@ -16,7 +16,6 @@ from accelerated_intelligent_document_processing_on_aws_spark.fixtures import (
 )
 from accelerated_intelligent_document_processing_on_aws_spark.operators.extract import (
     extract_turns,
-    lineage,
 )
 from accelerated_intelligent_document_processing_on_aws_spark.sources import tables
 from accelerated_intelligent_document_processing_on_aws_spark.sources.tables import (
@@ -114,13 +113,15 @@ def test_spread_scan_starts_no_job(spark, one_row_group):
     assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
-def test_unsalted_kernel_runs_at_most_one_task_per_core(spark, many_row_groups):
+def test_unsalted_kernel_runs_at_most_one_task_per_core(
+    spark, many_row_groups, kernel_tasks
+):
     """``salt=0`` runs the kernel on the scan partitions, so the scan's
     split count is the number of Python tasks, each paying the worker
     set-up.  A multi-row-group file must not scan as more than one
     split per core."""
     path, n = many_row_groups
-    rows = lineage(extract_turns(spark.read.parquet(path), salt=0)).collect()
+    rows = kernel_tasks(extract_turns(spark.read.parquet(path), salt=0)).collect()
     assert sum(r["rows_in"] for r in rows) == n
     tasks = {r["partition_id"] for r in rows}
     assert len(tasks) <= spark.sparkContext.defaultParallelism

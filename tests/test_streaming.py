@@ -63,7 +63,6 @@ class TestStreamingIngest:
         """The streamed extraction is batch ``extract_turns`` row for
         row on every extracted column."""
         from accelerated_intelligent_document_processing_on_aws_spark.operators.extract import (
-            drop_internal,
             extract_turns,
         )
 
@@ -76,7 +75,7 @@ class TestStreamingIngest:
         )
         q.awaitTermination(180)
 
-        batch = drop_internal(extract_turns(spark.read.parquet(shard_dir)))
+        batch = extract_turns(spark.read.parquet(shard_dir))
         cols = batch.columns
         got = spark.read.parquet(out).select(*cols).orderBy("conv_id", "turn_idx").collect()
         want = batch.orderBy("conv_id", "turn_idx").collect()

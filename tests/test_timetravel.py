@@ -357,13 +357,12 @@ class TestVersionedStreamSink:
         assert m["snapshot_id"] == 2
         # streamed result == batch extraction of the full input
         from accelerated_intelligent_document_processing_on_aws_spark.operators.extract import (
-            drop_internal,
             extract_turns,
         )
 
         want = sorted(
             tuple(r)
-            for r in drop_internal(extract_turns(src, salt=4))
+            for r in extract_turns(src, salt=4)
             .select("conv_id", "turn_idx", "extracted_text")
             .collect()
         )
