@@ -32,7 +32,10 @@ Scale design (100 TB / 10^12 turns):
 
 from __future__ import annotations
 
+import os
+import sys
 import time
+import zipimport
 from collections import Counter
 from functools import partial
 
@@ -94,6 +97,31 @@ class _LineageTallyParam(AccumulatorParam):
         return acc
 
 
+def _drop_spark_zip_importers():
+    """Delete from ``sys.path_importer_cache`` the zip importers over the
+    archives on the worker's start-up ``PYTHONPATH`` (Spark's own python
+    path: ``pyspark.zip``, py4j and the spark-core jar).
+
+    pyspark's ``setup_spark_files`` ends every task with
+    ``importlib.invalidate_caches()``, and under CPython 3.11 each cached
+    zip importer then re-reads its archive's whole directory: 0.1-0.27 s
+    per task on a reused worker (NOTES.md "Python task set-up cost").
+    The cache only memoizes; a path hook rebuilds a dropped importer
+    from ``zipimport._zip_directory_cache`` without a re-read, and
+    Spark's archives do not change during a worker's life.  Importers of
+    the job's py-files, which pyspark adds under the SparkFiles root,
+    stay and are still refreshed.
+
+    The kernel calls it after its last batch: a worker's first batch
+    imports modules (pyarrow's pandas shim pulls in
+    ``concurrent.futures``), and each new top-level import rebuilds one
+    importer per archive on ``sys.path``."""
+    spark_path = set(os.environ.get("PYTHONPATH", "").split(os.pathsep))
+    for key, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter) and finder.archive in spark_path:
+            del sys.path_importer_cache[key]
+
+
 def _kernel_batches_arrow(batches, tally=None):
     """The ``mapInArrow`` kernel wrapper: runs :func:`extract_turn_raw`
     per turn and builds the output RecordBatch with pyarrow directly,
@@ -103,7 +131,10 @@ def _kernel_batches_arrow(batches, tally=None):
     With ``tally`` (the accumulator of :func:`extract_wave`) the input also
     carries the checkpoint ``bucket``: each batch passes it through
     (:data:`WAVE_SCHEMA`) and adds its per-``(bucket, partition_id)``
-    lineage counts to ``tally``."""
+    lineage counts to ``tally``.
+
+    Inside a task it ends with :func:`_drop_spark_zip_importers`, so the
+    worker's next task starts without re-reading Spark's archives."""
     import pyarrow as pa
 
     ctx = TaskContext.get()
@@ -157,7 +188,6 @@ def _kernel_batches_arrow(batches, tally=None):
                 names=["start", "end", "kind", "conf"],
             ),
         )
-        row_ms = (time.perf_counter() - t0) * 1000.0 / n
         out = [
             col["conv_id"],
             col["turn_idx"],
@@ -175,6 +205,9 @@ def _kernel_batches_arrow(batches, tally=None):
         if tally is not None:
             out.append(col["bucket"])
             schema = WAVE_SCHEMA
+        rb = pa.RecordBatch.from_arrays(out, names=[f.name for f in schema.fields])
+        if tally is not None:
+            row_ms = (time.perf_counter() - t0) * 1000.0 / n
             buckets = col["bucket"].to_pylist()
             rows_out = Counter(b for b, t in zip(buckets, ex_text) if t is not None)
             tally.add(
@@ -183,7 +216,9 @@ def _kernel_batches_arrow(batches, tally=None):
                     for b, n_b in Counter(buckets).items()
                 }
             )
-        yield pa.RecordBatch.from_arrays(out, names=[f.name for f in schema.fields])
+        yield rb
+    if ctx is not None:
+        _drop_spark_zip_importers()
 
 
 def _salted_repartition(
@@ -195,10 +230,10 @@ def _salted_repartition(
 
     The salt, not the task count, spreads a hot conversation: its
     ``salt`` sub-keys hash across the tasks.  More tasks than cores only
-    add fixed costs: every Python-evaluated task pays the worker set-up
-    before its first row (about 0.2 s on a 4-vCPU host, see NOTES.md),
-    and every checkpoint wave writes one parquet file per task and
-    bucket."""
+    add fixed costs: every Python-evaluated task pays a set-up before
+    its first row (about 0.05 s of a core per kernel task on a reused
+    worker, 4-vCPU host, see NOTES.md), and every checkpoint wave writes
+    one parquet file per task and bucket."""
     if num_partitions is None:
         num_partitions = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(

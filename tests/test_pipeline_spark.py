@@ -1,6 +1,8 @@
 """Spark pipeline vs pure-Python oracle — the north-rule invariant:
 per-turn text equality under stable turn ordering (SURVEY.md §5(b,c))."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -14,6 +16,8 @@ from accelerated_intelligent_document_processing_on_aws_spark.kernel.oracle impo
 )
 from accelerated_intelligent_document_processing_on_aws_spark.operators.extract import (
     EXTRACTED_SCHEMA,
+    KERNEL_COLUMNS,
+    _kernel_batches_arrow,
     alerts,
     extract_turns,
     extract_turns_skew_aware,
@@ -137,6 +141,47 @@ def test_one_kernel_output_schema(spark, transcripts_path, call):
         want = want + [T.StructField("bucket", T.IntegerType())]
     assert schema == T.StructType(want)
     assert not [f.name for f in schema.fields if f.name.startswith("_")]
+
+
+def test_kernel_task_drops_spark_zip_importers(spark, tmp_path):
+    """A kernel task drops the cached zip importers over the archives on
+    the worker's start-up ``PYTHONPATH`` (Spark's own python path), so
+    pyspark's per-task ``importlib.invalidate_caches()`` stops re-reading
+    them.  An importer of an archive off that path, as a job's py-files
+    are, stays."""
+    import zipfile
+
+    own_zip = str(tmp_path / "own.zip")
+    with zipfile.ZipFile(own_zip, "w") as z:
+        z.writestr("own_mod.py", "")
+
+    def probe(batches):
+        import os
+        import sys
+        import zipimport
+
+        import pyarrow as pa
+
+        sys.path_importer_cache[own_zip] = zipimport.zipimporter(own_zip)
+        for _ in _kernel_batches_arrow(batches):
+            pass
+        left = sorted(
+            {f.archive for f in sys.path_importer_cache.values()
+             if isinstance(f, zipimport.zipimporter)}
+        )
+        yield pa.RecordBatch.from_pylist(
+            [{"pythonpath": os.environ.get("PYTHONPATH", ""), "archives": left}]
+        )
+
+    turns = spark.createDataFrame(generate_transcripts(4, seed=3)).select(*KERNEL_COLUMNS)
+    rows = turns.repartition(2).mapInArrow(
+        probe, "pythonpath string, archives array<string>"
+    ).collect()
+    assert rows
+    for r in rows:
+        spark_path = set(r["pythonpath"].split(os.pathsep))
+        assert not spark_path & set(r["archives"]), r["archives"]
+        assert own_zip in r["archives"]
 
 
 class TestLineage:

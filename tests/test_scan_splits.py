@@ -117,9 +117,10 @@ def test_unsalted_kernel_runs_at_most_one_task_per_core(
     spark, many_row_groups, kernel_tasks
 ):
     """``salt=0`` runs the kernel on the scan partitions, so the scan's
-    split count is the number of Python tasks, each paying the worker
-    set-up.  A multi-row-group file must not scan as more than one
-    split per core."""
+    split count is the number of Python tasks, each paying a fixed
+    set-up (about 0.05 s of a core per kernel task on a reused worker).
+    A multi-row-group file must not scan as more than one split per
+    core."""
     path, n = many_row_groups
     rows = kernel_tasks(extract_turns(spark.read.parquet(path), salt=0)).collect()
     assert sum(r["rows_in"] for r in rows) == n
